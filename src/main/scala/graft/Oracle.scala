@@ -136,8 +136,6 @@ object Oracle {
     * SQL twin: ROUND(AVG(x), 4) */
   def davg(c: Column): Column = round(avg(c), 4)
 
-  def davgSql(x: String): String = s"ROUND(AVG($x), 4)"
-
   /** Signed-zero-normalized round. DuckDB's round() preserves the IEEE
     * sign bit (a tiny negative rounds to -0.0); Spark's Round goes through
     * java.math.BigDecimal, which has no signed zero, and emits +0.0. The
@@ -148,9 +146,6 @@ object Oracle {
     * (covariances, correlations, slopes, log-ratios...).
     * SQL twin: ROUND(x, n) + 0.0 */
   def zround(c: Column, scale: Int): Column = round(c, scale) + lit(0.0)
-
-  /** SQL twin for zround. */
-  def zroundSql(x: String, scale: Int): String = s"(ROUND($x, $scale) + 0.0)"
 
   /** Rewrites an oracle SQL text so every ROUND(...) call is wrapped as
     * (ROUND(...) + 0.0), collapsing DuckDB's -0.0 to +0.0 to match Spark's

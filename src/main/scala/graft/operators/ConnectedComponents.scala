@@ -16,10 +16,15 @@ import org.apache.spark.storage.StorageLevel
   *
   * Why not plain label propagation: propagation needs O(diameter)
   * rounds; star operations contract chains in O(log²) rounds, and each
-  * round is only {groupBy min → join → project → distinct} — codegen'd
-  * hash aggregates and one shuffle each, no collect_list (a high-degree
-  * node never materializes its neighbor list, so skew costs nothing
-  * beyond the shuffle of its edges).
+  * round is only {window min → project → distinct} over one shuffle.
+  *
+  * Skew cost: the per-center min is a window partitioned by the center,
+  * so a high-degree node's whole symmetrized adjacency is buffered in
+  * ONE task (WindowExec's spill-backed row buffer — it spills rather
+  * than failing, but that task runs alone for the hub's edge count).
+  * The groupBy-min this replaced reduced map-side before its shuffle
+  * and so never gathered a hub's neighbors in one place; a mega-star
+  * graph pays single-task buffering here.
   *
   * Scale: every round's volume is bounded by the CURRENT edge set,
   * which only shrinks (toward one star edge per non-root node).

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Iteration
-import org.apache.spark.sql.graft.VectorExpressions.{vecDot, vecNorm}
+import org.apache.spark.sql.graft.VectorExpressions.{nearestCentroid, vecDot, vecNorm}
 
 /** Similarity search over the `embeddings` table (`Array[Float]` column).
   *
@@ -81,10 +81,10 @@ object VectorQueries {
     * them as per-cell dimension means (posexplode → groupBy(cell, d) →
     * exact DECIMAL mean, so the result is independent of partition
     * combine order — a double sum would wobble at the ulp level between
-    * runs). Every vector is assigned to its nearest centroid (broadcast
-    * join + max_by argmax: partial aggregation reduces the n×16 cross
-    * product map-side, so only ~n rows shuffle), then queries probe only
-    * their own cell: candidate work drops from n² to Σ|cell|².
+    * runs). Every vector is assigned to its nearest centroid (one
+    * broadcast centroid row + the [[nearestCentroid]] kernel, map-side —
+    * no ×16 rows, no shuffle), then queries probe only their own cell:
+    * candidate work drops from n² to Σ|cell|².
     * Approximate ⇒ rows-only check; SelfConsistencySpec pins cosine
     * exactness and the recall floor.
     * Scale: each Lloyd iteration is one n×d-row shuffle (d longs per
@@ -98,34 +98,18 @@ object VectorQueries {
     Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"), vecNorm(col("embedding")).as("nrm"))
 
-  /** Nearest-centroid assignment, single-map form (r14): the centroid
-    * count is bounded by design (k = 16 at any corpus size — it is the
-    * coarse quantizer), so the argmax FOLDS over one broadcast array of
-    * the k centroids per input row. Versus the r12/r13 aggregate forms
-    * (crossJoin ×k → extremum aggregate → re-attach join): no ×k row
-    * explosion, no SortAggregate extremum buffer, no corpus-sized
-    * exchange, no re-attach join, and `e` is referenced exactly once
-    * with all its columns preserved (output = e.* + cell) — which also
-    * removes the old unique-vec_id precondition.
-    *
-    * Bit-identical tie-break: the fold walks centroids in ascending
-    * cent_id (sort_array) and replaces only on STRICT improvement, so
-    * equal cosines keep the lower cent_id — exactly the old
-    * max_by(struct(cent_cos, -cent_id)). Spark's when(>) uses the same
-    * NaN-greatest comparison semantics the struct ordering used;
-    * scores are finite here anyway (centroids are means of finite
-    * floats, norms > 0). */
+  /** Nearest-centroid assignment: e.* + cell. The coarse quantizer's
+    * k = 16 centroids (bounded at any corpus size) ride one broadcast
+    * row, and the codegen'd [[nearestCentroid]] kernel takes each row's
+    * cosine argmax, ties to the lower cent_id — map-side, `e` read once.
+    * The cosine divides by the kernel's own vec_norm of `embedding`; the
+    * `nrm` every caller carries is that same value. */
   private def ivfAssign(e: DataFrame, cents: DataFrame): DataFrame = {
     val cb = broadcast(cents.groupBy().agg(sort_array(
       collect_list(struct(col("cent_id"), col("c_emb"), col("c_nrm")))).as("__cb")))
-    val scored = transform(col("__cb"), c =>
-      struct((vecDot(col("embedding"), c.getField("c_emb")) /
-          (col("nrm") * c.getField("c_nrm"))).as("s"),
-        c.getField("cent_id").as("c")))
-    val best = aggregate(scored,
-      struct(lit(Double.NegativeInfinity).as("s"), lit(-1L).as("c")),
-      (acc, x) => when(x.getField("s") > acc.getField("s"), x).otherwise(acc))
-    e.crossJoin(cb).withColumn("cell", best.getField("c")).drop("__cb")
+    e.crossJoin(cb)
+      .withColumn("cell", nearestCentroid(col("embedding"), col("__cb"), cosine = true))
+      .drop("__cb")
   }
 
   /** Deterministic 1-in-`step` training sample head: one broadcast row
@@ -150,11 +134,10 @@ object VectorQueries {
   private[graft] def ivfCentroids(s: SparkSession, dir: String): DataFrame =
     graft.PlanCache.memo(s, dir, "ivf_centroids", "k16,it2,s6400") {
       // eagerly checkpointed (r14, the pqCodebooks `dv` idiom): the
-      // sampled slice sits on both sides of each round's [[ivfAssign]]
-      // (score scan + re-attach) × 2 rounds + the seed filter — a lazy
-      // plan would re-run the corpus scan + trainStep agg ~5× inside
-      // the centroid build. Sample-bound (≤6400 rows), so the pinned
-      // blocks are kilobytes at any corpus scale. NOT released: the
+      // sampled slice feeds the seed filter and the distinct collapse
+      // below — a lazy plan would re-run the corpus scan + trainStep agg
+      // for each. Sample-bound (≤6400 rows), so the pinned blocks are
+      // kilobytes at any corpus scale. NOT released: the
       // returned (lazy) centroid plan still references it until the
       // memo's persist materializes.
       val e = Iteration.ckpt(ivfSpine(s, dir)
@@ -167,12 +150,11 @@ object VectorQueries {
       // 4): the 16-way argmax and the member mean-sums are functions of
       // the embedding VALUE, so Lloyd scores once per distinct sampled
       // embedding and weights the mean by the class's sampled-member
-      // count. Class-sized and read on both sides of each round's
-      // assign × 2 rounds ⇒ eagerly checkpointed like `e`.
+      // count. Class-sized and read by each round's assign × 2 rounds ⇒
+      // eagerly checkpointed like `e`.
       val dv = Iteration.ckpt(e
         .groupBy(xxhash64(col("embedding")).as("fp"))
-        .agg(count(lit(1)).as("mult"),
-          first(col("embedding")).as("embedding"), first(col("nrm")).as("nrm")))
+        .agg(count(lit(1)).as("mult"), first(col("embedding")).as("embedding")))
       for (_ <- 1 to 2) {
         // Weighted mean, BIT-IDENTICAL to the member-level
         // avg(x :: decimal(20,10)) this replaces, by construction:
@@ -605,8 +587,9 @@ object VectorQueries {
     * The 64-dim vector splits into m = 8 subspaces of 8 dims; each
     * subspace trains its own k = 256 codebook (FAISS's standard 8-bit
     * geometry; 2 Lloyd iterations, run RELATIONALLY with q56's
-    * determinism discipline: fixed-point per-dim means, min_by argmin
-    * with (distance, centroid-id) tie-breaks), so a vector compresses to
+    * determinism discipline: fixed-point per-dim means, a
+    * [[nearestCentroid]] argmin with (distance, centroid-id)
+    * tie-breaks), so a vector compresses to
     * 8 × 8-bit codes = 8 bytes — 32× smaller than the float input, the
     * compression that lets a 10⁹-vector index live in RAM. Assignment
     * ranks by ‖c‖² − 2·s·c (the ‖s‖² term is constant per sub-vector —
@@ -693,47 +676,27 @@ object VectorQueries {
     * once un-memoized inside q139's candidate stage (the 256-way
     * scoring of every distinct class's 8 sub-vectors, the expensive
     * half of the q96 slot). One build now serves both. */
-  private[queries] def repCodes(s: SparkSession, dir: String): DataFrame =
+  private[graft] def repCodes(s: SparkSession, dir: String): DataFrame =
     graft.PlanCache.memo(s, dir, "rep_codes", "m8,k256,it2") {
       pqAssign(repSubvecs(s, dir).withColumnRenamed("fp", "vec_id"),
           pqCodebooks(s, dir))
         .select(col("vec_id").as("fp"), col("sub"), col("svec"), col("cid"))
     }
 
-  /** Nearest-codebook assignment: subvecs.* + cid. The k = 256 argmin
-    * stays in the codegen'd broadcast-join ×256 → scalar-buffer
-    * extremum → re-attach-by-fingerprint pipeline (the r13 form).
-    *
-    * Measured and REJECTED this round (guide §1.1: the first-principles
-    * "ideal" lost to the empirical loop): a single-map fold over a
-    * broadcast 256-entry codebook array — zero exchanges, no re-attach
-    * — ran the whole 256-way scoring through the INTERPRETED
-    * higher-order-function eval path (HOFs get no whole-stage codegen)
-    * and measured 2-4× SLOWER end-to-end (pqCodebooks 4.7-6.0 s →
-    * 9.2-20.9 s at sf0.1; VecProf, both on- and off-peak windows). The
-    * same fold DID win for the 16-entry coarse quantizer ([[ivfAssign]])
-    * where the per-row fold is 16× shorter and it deletes two
-    * corpus-sized exchanges.
-    *
-    * The r13 scalar-buffer note stands: with the svec array in the
-    * extremum struct the aggregate drags it through the sort and both
-    * partial/final buffers (measured 5×, VecProf's assign1 probe); the
-    * argmin therefore runs over (score, cid) scalars and svec (plus any
-    * other input columns, e.g. the training loop's multiplicity)
-    * re-attach by one join on the sub-vector fingerprint. Group keys
-    * are scalar fingerprints (xxhash64-of-value, the [[embMembers]]
-    * collision stance) — array group-keys fall back to SortAggregate. */
+  /** Nearest-codebook assignment: subvecs.* + cid. Each subspace's
+    * k = 256 codebook is one broadcast row (a cid-sorted array of (cid,
+    * cvec, cnorm2)) joined on `sub`; the codegen'd [[nearestCentroid]]
+    * kernel takes each sub-vector's argmin of cnorm2 − 2·dot, ties to
+    * the lowest cid — the (score, cid) order [[pqAssignSql]] replays.
+    * Map-side: no aggregate, no exchange of the sub-vector side, and
+    * every input column (e.g. the training loop's multiplicity) stays
+    * on its row. */
   private def pqAssign(subvecs: DataFrame, cents: DataFrame): DataFrame = {
-    val extra = subvecs.columns.filter(c => c != "sub" && c != "svec")
-    val withFp = subvecs.withColumn("sfp", xxhash64(col("svec")))
-    val best = withFp.join(broadcast(cents), "sub")
-      .select(col("sub"), col("sfp"),
-        (col("cnorm2") - lit(2d) * vecDot(col("svec"), col("cvec"))).as("score"),
-        col("cid"))
-      .groupBy(col("sub"), col("sfp"))
-      .agg(min_by(col("cid"), struct(col("score"), col("cid"))).as("cid"))
-    withFp.join(best, Seq("sub", "sfp"))
-      .select((Seq("sub", "svec") ++ extra :+ "cid").map(col): _*)
+    val cb = broadcast(cents.groupBy(col("sub")).agg(sort_array(
+      collect_list(struct(col("cid"), col("cvec"), col("cnorm2")))).as("__cb")))
+    subvecs.join(cb, "sub")
+      .withColumn("cid", nearestCentroid(col("svec"), col("__cb"), cosine = false))
+      .drop("__cb")
   }
 
   /** Per-subspace codebooks after 2 deterministic Lloyd iterations:
@@ -796,9 +759,9 @@ object VectorQueries {
       val sampledClassCounts = embMembers(s, dir).crossJoin(step)
         .filter(pmod(col("vec_id"), col("step")) === 0)
         .groupBy(col("fp")).agg(count(lit(1)).as("m"))
-      // eagerly checkpointed: the slice sits on both sides of each
-      // round's assign (scored scan + svec re-attach) × 2 rounds — a
-      // lazy plan would recompute the repSubvecs join 4×. Class-count-
+      // eagerly checkpointed: each round's assign reads the slice × 2
+      // rounds — a lazy plan would recompute the repSubvecs join and
+      // the sampled class counts per round. Class-count-
       // sized (≤ |distinct| · 8 rows), so the pinned blocks are
       // kilobytes-to-MBs at any corpus scale.
       val dv = Iteration.ckpt(repSubvecs(s, dir).join(sampledClassCounts, "fp")
@@ -901,9 +864,7 @@ object VectorQueries {
     // + tie-break members get in [[ivfAssigned]])
     val candCells = repCells(s, dir)
       .select(col("fp").as("cfp"), col("nrm").as("c_nrm"), col("cell"))
-    // class sub-vectors ([[repSubvecs]]) → class PQ codes against the
-    // memoized sample-trained codebooks ([[pqAssign]] groups by its
-    // first column, so fp rides through as `vec_id`)
+    // class sub-vectors ([[repSubvecs]]): the query side of the LUT
     val repSubvecsF = repSubvecs(s, dir)
     // class PQ codes — the shared [[repCodes]] memo (r14: was an
     // un-memoized duplicate of the scoring pqCodes' attach also ran)
@@ -958,8 +919,9 @@ object VectorQueries {
     * associated expression chains — the unrolling is exactly what makes
     * the float arithmetic order (and hence the hash) engine-identical.
     * Each `aN`/`cN` CTE pair is one Lloyd step: assignment by
-    * row_number over (score, cid) — DuckDB's spelling of Spark's
-    * min_by struct tie-break — then the integer mean formula verbatim. */
+    * row_number over (score, cid) — DuckDB's spelling of the
+    * [[nearestCentroid]] (score, cid) tie-break — then the integer mean
+    * formula verbatim. */
   // --- shared DuckDB PQ-replay fragments (q96Sql, q216Sql) ---
 
   /** Σ aᵢ·bᵢ as a left-associated chain — matches vec_dot's fold order. */
@@ -1033,9 +995,7 @@ object VectorQueries {
        |${p}c2 AS (${pqReestimateSql(s"${p}a2")})""".stripMargin
 
   val q96Sql: String = {
-    def dot8(a: String, b: String): String = pqDot8Sql(a, b)
     def assign(from: String, cents: String): String = pqAssignSql(from, cents)
-    def reestimate(from: String): String = pqReestimateSql(from)
     // wrap the unsigned code accumulation to Spark's signed-64 shiftleft
     val pow = (0 to 7).map(s => s"WHEN $s THEN ${BigInt(2).pow(8 * s)}::HUGEINT")
       .mkString("CASE sub ", " ", " END")
@@ -1975,7 +1935,7 @@ object VectorQueries {
   // --- shared DuckDB IVF-replay fragments (q215Sql, q216Sql) ---
 
   /** One Lloyd assignment step: every vector to its max-cosine centroid
-    * (ties to the lowest cent_id, mirroring max_by(struct(cos, -id))).
+    * (ties to the lowest cent_id, mirroring [[nearestCentroid]]).
     * Exposes BOTH `{out}_cos` (the full query×centroid cosine table —
     * q216 ranks probes from it) and `{out}` (the rn=1 assignment). */
   private def ivfAssignCtes(cents: String, out: String,

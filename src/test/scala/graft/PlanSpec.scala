@@ -223,6 +223,35 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), "LUT must broadcast")
   }
 
+  test("repCodes/pqCodebooks: PQ assignment is the nearest_centroid kernel — no min_by, no sub-vector fingerprint") {
+    import org.apache.spark.sql.catalyst.expressions.XxHash64
+    import org.apache.spark.sql.catalyst.expressions.aggregate.MinBy
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.graft.VectorExpressions.NearestCentroid
+    // every physical node, through AQE wrappers, query stages and memo
+    // caches (the memos are materialized first: other specs may have
+    // built them already, so the final AQE plan is the one inspected)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    for ((name, df) <- Seq("repCodes" -> VectorQueries.repCodes(spark, dir),
+        "pqCodebooks" -> VectorQueries.pqCodebooks(spark, dir))) {
+      df.count()
+      val exprs = nodes(df.queryExecution.executedPlan).flatMap(_.expressions)
+      assert(exprs.exists(_.exists(_.isInstanceOf[NearestCentroid])), s"$name: no kernel")
+      assert(!exprs.exists(_.exists(_.isInstanceOf[MinBy])), s"$name: min_by aggregate")
+      assert(!exprs.exists(_.exists {
+        case h: XxHash64 => h.references.exists(_.name == "svec")
+        case _ => false
+      }), s"$name: sub-vector fingerprint")
+    }
+  }
+
   test("q140: JL projection is scan-local; pair audit joins stay equi") {
     val p = plan(VectorQueries.q140JlProjection(spark, dir))
     assert(!p.contains("CartesianProduct") &&
@@ -351,7 +380,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("q77 iterations: no broadcast — co-partitioned SMJ off the cached layout") {
     import org.apache.spark.sql.execution.{SortExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec

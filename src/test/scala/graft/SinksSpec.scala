@@ -122,6 +122,31 @@ class SinksSpec extends AnyFunSuite {
     assert(txs.count() === blocks.select(sum(col("tx_count"))).head().getLong(0))
   }
 
+  /** Spark part files under `dir` (none when the directory is absent). */
+  private def partFiles(dir: String): Seq[String] =
+    if (!Files.exists(Paths.get(dir))) Nil
+    else Files.list(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("part-")).toSeq
+
+  test("K6 empty batch skipped: writeJsonl of an empty frame creates no part file") {
+    val out = Files.createTempDirectory("empty").toString
+    FileSinks.writeJsonl(BlockSources.blockRange(spark, 0, 10).limit(0), out, "blocks")
+    assert(partFiles(s"$out/blocks").isEmpty)
+  }
+
+  test("K6 empty batch skipped: blocks without transactions write no child-table part files") {
+    val out = Files.createTempDirectory("notx").toString
+    import spark.implicits._
+    // BlockSources' per-block transaction count, kept to the empty blocks
+    val empty = (0L until 300L).filter(b => (b * 2654435761L) % 97 % 7 == 0)
+    val nested = BlockSources.blocksFromIds(empty.toDF("block_number"))
+    assert(empty.size >= 3 && FanOut.tables(nested).transactions.count() === 0)
+    FanOutWriter.jsonl(out, Seq("blocks", "transactions", "account_refs")).publishBlocks(nested)
+    assert(partFiles(s"$out/blocks").nonEmpty)
+    assert(partFiles(s"$out/transactions").isEmpty)
+    assert(partFiles(s"$out/account_refs").isEmpty)
+  }
+
   test("K8 SINGLE_PUBLISHER merged stream demuxes back to exact per-table sets") {
     val out = Files.createTempDirectory("single").toString
     val names = Seq("blocks", "transactions", "account_refs")
