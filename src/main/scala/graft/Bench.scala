@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Driver-run benchmark: times every registered query at SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line {"metric","value","unit","queries","errors","sf"}.
   *
@@ -18,14 +17,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val fullJsonPath =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "target/bench_full.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
     sorted.foreach { case (_, fn) =>
       try fn(spark, warmDir).count() catch { case _: Throwable => () }

@@ -24,19 +24,8 @@ import java.nio.file.Paths
   * fan-out, exactly-once bookkeeping from the streaming checkpoint.
   */
 object GraftCli {
-  private[graft] def session(app: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(app)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private[graft] def session(app: String): SparkSession =
+    Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), app = Some(app))
 
   val tables: Seq[String] = Seq("blocks", "transactions", "account_refs")
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan inspector: print the formatted physical plan (post-execution, so
@@ -14,14 +13,7 @@ object Explain {
     val name = args.headOption.getOrElse("all")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     val targets =
       if (name == "all") SparkEntry.queries.toSeq.sortBy(_._1)
       else SparkEntry.queries.filter(_._1 == name).toSeq

@@ -30,8 +30,10 @@ object Tables {
     * Keyed by session so a stopped session's handles are never served
     * to a new one. References are STRONG (a ConcurrentHashMap holds its
     * keys) — so, mirroring PlanCache, an application-end listener drops
-    * a session's entries when it stops; the live entry count is bounded
-    * by |open sessions|·|dirs|·|tables|.
+    * a session's entries when the APPLICATION ends (its SparkContext
+    * stops), not when the session is discarded: a derived newSession()
+    * keeps its handles until then, so the live entry count is bounded by
+    * |sessions created in the application|·|dirs|·|tables|.
     *
     * Assumes a (dir, table) parquet is immutable within one session —
     * true for every driver/test/stress path today (generators write to

@@ -12,14 +12,7 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     // optional local-iteration filter (driver always passes 2 args)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
     // Per-dump oracle stamp (round-9 advice): a filtered re-run after an
     // oracle-SQL change would otherwise leave out-of-filter dumps from the

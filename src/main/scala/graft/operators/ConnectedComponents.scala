@@ -93,16 +93,6 @@ object ConnectedComponents {
     roots.unionByName(rootSelf)
   }
 
-  /** One round's frame plan (canonicalize → largeStar → smallStar) —
-    * dev plan capture only ([[graft.CcPlan]]); [[run]] does not call
-    * this. */
-  private[graft] def roundPlan(edges: DataFrame): DataFrame = {
-    val Seq(ca, cb) = edges.columns.toSeq.take(2).map(col)
-    val e = edges.select(least(ca, cb).as("u"), greatest(ca, cb).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    smallStar(largeStar(e))
-  }
-
   /** (count, Σu+Σv) — both monotone non-increasing across star rounds;
     * stability ⇒ fixpoint. */
   private def checksum(e: DataFrame): (Long, Long) = {

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Oracle, Tables}
-import graft.operators.ConnectedComponents
+import graft.operators.ClassCollapse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,33 +32,22 @@ object CorpusQueries {
     *
     * Scale (r12, after the sf100 sweep showed the member graph going
     * quadratic): CC runs on the REP-level pair graph — one node per
-    * distinct shingle set ([[LlmQueries.repDedupPairs]]) — and members
-    * inherit their rep's component through the fingerprint join; a
-    * duplicate group with NO external edge is a component of its own
-    * (the oracle's no-external-edge leg — exact copies are J=1.0
-    * near-dups of each other). cluster_id is unchanged: a rep IS its
-    * group's min member, so the component's min rep is the min member
-    * id member-level CC emitted. Edge volume is the DISTINCT near-dup
-    * pair count regardless of duplicate multiplicity; every CC round
-    * is a groupBy-min + join on the shrinking edge set — no collect,
-    * no O(n²). */
+    * distinct shingle set ([[LlmQueries.repDedupPairs]]) — through
+    * [[ClassCollapse.components]]; a duplicate group with NO external
+    * edge is the oracle's no-external-edge leg (exact copies are J=1.0
+    * near-dups of each other). Edge volume is the DISTINCT near-dup
+    * pair count regardless of duplicate multiplicity — no collect, no
+    * O(n²). */
   def q70DedupClusters(s: SparkSession, dir: String): DataFrame = {
     // the component assignment is a doc-count-bounded output of an
     // expensive pass, shared with q111/q135/q138 — memoized under the
     // same key q111 reads, so the iterative CC rounds run once per
     // (session, dir) whichever cluster query fires first
     graft.PlanCache.memo(s, dir, "dedup_clusters", "w3,k64,b16r4,t0.8") {
-      val groups = LlmQueries.repStats(s, dir)
-        .select(col("fp"), col("doc_id").as("rep"), col("mult"))
-      val repCc = ConnectedComponents.run(
+      ClassCollapse.components(
+          LlmQueries.setFingerprints(s, dir).select(col("doc_id"), col("fp")),
+          LlmQueries.repStats(s, dir),
           LlmQueries.repDedupPairs(s, dir).select(col("doc_a"), col("doc_b")))
-        .select(col("node").as("rep"), col("component"))
-      val solo = groups.filter(col("mult") >= 2)
-        .join(repCc.select(col("rep")), Seq("rep"), "left_anti")
-        .select(col("rep"), col("rep").as("component"))
-      LlmQueries.setFingerprints(s, dir).select(col("doc_id"), col("fp"))
-        .join(groups.select(col("fp"), col("rep")), "fp")
-        .join(repCc.unionByName(solo), "rep")
         .select(col("doc_id"), col("component").as("cluster_id"))
     }.orderBy(col("doc_id"))
   }

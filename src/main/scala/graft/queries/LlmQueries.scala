@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.ClassCollapse
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** LLM-training-data pipeline operators over the `documents` table:
@@ -21,48 +22,54 @@ import org.apache.spark.sql.functions._
   */
 object LlmQueries {
 
-  /** (doc_id, tfp): doc → 64-bit TEXT-class id (xxhash64 of the raw
+  /** (doc_id, tfp): doc → TEXT class ([[ClassCollapse.key]] of the raw
     * text). The head of the two-level duplicate collapse: byte-identical
     * copies — 30-60% of a web corpus, and exactly what replication
     * stress multiplies — are identified from ONE narrow scan, before any
-    * tokenization. Collision stance matches the shingle hashes
-    * (n²/2⁶⁴ across distinct texts; a collision would fail the exact
-    * oracles loudly). */
+    * tokenization. */
   private def textMembers(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "textmem", "") {
       Tables.documents(s, dir)
-        .select(col("doc_id"), xxhash64(col("text")).as("tfp"))
+        .select(col("doc_id"), ClassCollapse.key(col("text")).as("tfp"))
     }
 
-  /** (tfp, hg): one row per DISTINCT (text, word-3-gram) — the shingle
-    * pass run over ONE representative document per distinct text
-    * (min doc_id, from [[textMembers]]), not over every copy. This is
+  /** A trigram value family of the two-level text collapse: `value` is
+    * one word-3-gram's value over the zipped token struct `tg` (t0, t1,
+    * t2); `tag`/`params` key the family's memos. */
+  private[queries] final case class Trigrams(tag: String, params: String, value: Column)
+
+  /** xxhash64 of the trigram — the shingle hash of the dedup family.
+    * Downstream identity is the 64-bit hash (collision odds across ~10⁶
+    * distinct shingles ≈ n²/2⁶⁴ — nil; the exact-Jaccard oracle would
+    * catch one). */
+  private[queries] lazy val Shingles: Trigrams =
+    Trigrams("", "w3", xxhash64(col("tg.t0"), col("tg.t1"), col("tg.t2")))
+
+  /** (tfp, hg): one row per DISTINCT (text, trigram value) of family `f`
+    * — the shingle pass run over ONE representative document per
+    * distinct text (from [[textMembers]]), not over every copy. This is
     * the sf100 probe's lesson made structural: tokenize+explode cost
     * now scales with DISTINCT corpus bytes, not total corpus bytes
     * (1000× replication = 1000× fewer tokenizer rows than the naive
     * pass; measured at sf100: the dedup family's shared memo build
     * dropped from ~9 min to seconds).
     *
-    * The shingling itself is unchanged: arrays_zip of three array
-    * slices (token i, i+1, i+2) → explode → xxhash64 → distinct.
-    * Everything before the distinct is per-partition codegen'd
-    * projection — no window sort, no shuffle — and the shingle string
-    * is never materialized: the trigram is hashed straight out of the
-    * zipped struct, so the one shuffle (the distinct) moves 16-byte
-    * (tfp, hg) rows instead of ~30-char strings.
+    * The shingling itself: arrays_zip of three array slices (token i,
+    * i+1, i+2) → explode → trigram value → distinct. Everything before
+    * the distinct is per-partition codegen'd projection — no window
+    * sort, no shuffle — and the shingle string is never materialized:
+    * the trigram is valued straight out of the zipped struct, so the
+    * one shuffle (the distinct) moves 16-byte (tfp, hg) rows instead of
+    * ~30-char strings.
     *
     * Earlier shapes, for the record: lambda-transform shingling ran
     * interpreted (~11 s at sf0.1); posexplode + window-lead ran ~1 s
     * locally but its shuffle+sort amplified 6× under machine contention
-    * in the round-1 driver bench. This one has no sort to amplify.
-    *
-    * Downstream identity is the 64-bit hash (collision odds across
-    * ~10⁶ distinct shingles ≈ n²/2⁶⁴ — nil; the exact-Jaccard oracle
-    * would catch one). */
-  private def repTextRows(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "reptextrows", "w3") {
-      val reps = textMembers(s, dir).groupBy(col("tfp"))
-        .agg(min(col("doc_id")).as("doc_id"))
+    * in the round-1 bench. This one has no sort to amplify. */
+  private def repTextRows(s: SparkSession, dir: String,
+      f: Trigrams = Shingles): DataFrame =
+    memo(s, dir, s"reptextrows${f.tag}", f.params) {
+      val reps = ClassCollapse.classes(textMembers(s, dir), "doc_id", "tfp")
       val n = size(col("toks"))
       Tables.documents(s, dir)
         .join(reps, "doc_id") // text reps only; AQE picks the join shape
@@ -72,8 +79,7 @@ object LlmQueries {
           slice(col("toks"), lit(1), n - 2).as("t0"),
           slice(col("toks"), lit(2), n - 2).as("t1"),
           slice(col("toks"), lit(3), n - 2).as("t2"))).as("tg"))
-        .select(col("tfp"),
-          xxhash64(col("tg.t0"), col("tg.t1"), col("tg.t2")).as("hg"))
+        .select(col("tfp"), f.value.as("hg"))
         .distinct()
     }
 
@@ -108,37 +114,51 @@ object LlmQueries {
       (mk: => DataFrame): DataFrame =
     graft.PlanCache.memo(s, dir, tag, params)(mk)
 
-  /** (doc_id, fp, sz): per-doc shingle-SET fingerprint — xxhash64 of
-    * the sorted shingle-hash array (same 64-bit-collision stance as the
-    * shingle hashes; n²/2⁶⁴, the exact oracles would catch one).
-    * Identical sets ⇒ identical similarity against every other doc, so
-    * pairwise stages (q103/q114) run over one representative per
-    * distinct set and re-expand members afterwards — web corpora are
-    * 30-60% byte-identical copies and every pair generator otherwise
-    * pays Σ multiplicity². */
-  private[queries] def setFingerprints(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "setfp", "w3") {
+  /** (doc_id, fp, sz): per-doc trigram-SET class of family `f` — the
+    * [[ClassCollapse.key]] of the sorted trigram-value array, and the
+    * set size. Identical sets ⇒ identical similarity against every other
+    * doc, so pairwise stages run over one representative per distinct
+    * set and re-expand members afterwards — web corpora are 30-60%
+    * byte-identical copies and every pair generator otherwise pays
+    * Σ multiplicity². Docs with < 3 tokens have no set and no row. */
+  private[queries] def setFingerprints(s: SparkSession, dir: String,
+      f: Trigrams = Shingles): DataFrame =
+    memo(s, dir, s"setfp${f.tag}", f.params) {
       // set fp computed once per DISTINCT TEXT (identical texts have
-      // identical shingle sets), then broadcast back over the members —
-      // the groupBy runs on |distinct texts| rows, not |corpus| rows
-      val repFps = repTextRows(s, dir).groupBy(col("tfp"))
-        .agg(xxhash64(sort_array(collect_list(col("hg")))).as("fp"),
-          count(lit(1)).as("sz"))
+      // identical trigram sets), then broadcast back over the members —
+      // the groupBy runs on |distinct texts| rows, not |corpus| rows;
+      // repTextRows is distinct, so the set size is the array's
+      val repFps = repTextRows(s, dir, f).groupBy(col("tfp"))
+        .agg(sort_array(collect_list(col("hg"))).as("set"))
+        .select(col("tfp"), ClassCollapse.key(col("set")).as("fp"),
+          size(col("set")).cast("long").as("sz"))
       textMembers(s, dir).join(repFps, "tfp")
         .select(col("doc_id"), col("fp"), col("sz"))
     }
 
-  /** (fp, doc_id, sz, mult): one representative (min doc_id) per
-    * distinct shingle set, with the set size and member multiplicity —
-    * the head relation of the exact-duplicate collapse. One narrow
-    * groupBy over the persisted fingerprints, memoized because every
-    * pair generator (q20/q21/q103/q114) derives some projection of it. */
+  /** (fp, doc_id, mult, sz): the shingle-set classes — one
+    * representative (min doc_id) per distinct shingle set, with its
+    * multiplicity and set size. Memoized because every pair generator
+    * (q20/q21/q103/q114) and q70 derive some projection of it. */
   private[queries] def repStats(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "repstats", "w3") {
-      setFingerprints(s, dir).groupBy(col("fp"))
-        .agg(min(col("doc_id")).as("doc_id"), first(col("sz")).as("sz"),
-          count(lit(1)).as("mult"))
+      ClassCollapse.classes(setFingerprints(s, dir), "doc_id", "fp",
+        first(col("sz")).as("sz"))
     }
+
+  /** (doc_id, hg): the trigram values of family `f` for the set-class
+    * representatives in `reps`. Every set-level representative (min
+    * doc_id over its fp class) is also a text-level representative (min
+    * doc_id over its text class): the fp-class min is the min of its
+    * text-class minimums, and each text-class min IS a [[repTextRows]]
+    * rep — so the values read off the rep-text stream without touching
+    * the member level. */
+  private def repRows(s: SparkSession, dir: String, f: Trigrams,
+      reps: DataFrame): DataFrame =
+    textMembers(s, dir)
+      .join(reps.select(col("doc_id")), Seq("doc_id"), "left_semi")
+      .join(repTextRows(s, dir, f), "tfp")
+      .select(col("doc_id"), col("hg"))
 
   /** The shingle stream restricted to collapse representatives — the
     * left-semi join every pair generator previously re-derived per
@@ -149,18 +169,7 @@ object LlmQueries {
     * once per (session, dir) and q20/q21/q103/q114 all read the
     * persisted stream. */
   private def repShingleRows(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "reprows", "w3") {
-      // every set-level representative (min doc_id over its fp class) is
-      // also a text-level representative (min doc_id over its text
-      // class): the fp-class min is the min of its text-class minimums,
-      // and each text-class min IS in textReps — so the set-rep's
-      // shingles can be read off repTextRows without touching the
-      // member-level stream
-      textMembers(s, dir)
-        .join(repStats(s, dir).select(col("doc_id")), Seq("doc_id"), "left_semi")
-        .join(repTextRows(s, dir), "tfp")
-        .select(col("doc_id"), col("hg"))
-    }
+    memo(s, dir, "reprows", "w3")(repRows(s, dir, Shingles, repStats(s, dir)))
 
   /** DuckDB twin of [[shingled]] as a CTE body (shared with the
     * clustering oracle in CorpusQueries). */
@@ -234,43 +243,6 @@ object LlmQueries {
       |  FROM dmem ma JOIN dmem mb
       |    ON ma.rep = mb.rep AND ma.doc_id < mb.doc_id
       |  JOIN sz ON sz.doc_id = ma.rep)""".stripMargin
-
-  /** Labeled sub-stage actions for graft.Prof (dev profiling only). */
-  def profileStages(s: SparkSession, dir: String): Seq[(String, () => Long)] = {
-    def rows = shingleRows(s, dir)
-    val n = size(col("toks"))
-    def base = Tables.documents(s, dir)
-      .select(col("doc_id"), tokensOf(col("text")).as("toks"))
-      .filter(n >= 3)
-    def zipped = base.select(col("doc_id"), explode(arrays_zip(
-        slice(col("toks"), lit(1), n - 2).as("t0"),
-        slice(col("toks"), lit(2), n - 2).as("t1"),
-        slice(col("toks"), lit(3), n - 2).as("t2"))).as("tg"))
-    def hashed = zipped.select(col("doc_id"),
-      xxhash64(col("tg.t0"), col("tg.t1"), col("tg.t2")).as("hg"))
-    Seq(
-      "scan_split" -> (() => base.count()),
-      "zip_explode" -> (() => zipped.count()),
-      "hash_only" -> (() => hashed.count()),
-      "hash_distinct" -> (() => hashed.distinct().count()),
-      "shingles_cold" -> (() => rows.count()),
-      "shingles_warm" -> (() => rows.count()),
-      "minhash_sigs" -> (() => minhashSigs(rows, 64).count()),
-      "band_rows" -> (() => bandRows(minhashSigs(rows, 64), 16, 4).count()),
-      "cand_pairs" -> (() => {
-        val bands = bandRows(minhashSigs(rows, 64), 16, 4)
-        bands.as("x").join(bands.as("y"),
-            col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-          .distinct().count()
-      }),
-      "q20_full" -> (() => q20DedupMinhash(s, dir).count()),
-      "q20_again" -> (() => q20DedupMinhash(s, dir).count()),
-      "q21_full" -> (() => q21DedupNgramJaccard(s, dir).count()),
-      "q22_full" -> (() => q22DedupSimhash(s, dir).count()),
-      "q50_full" -> (() => q50CleanPipeline(s, dir).count()))
-  }
 
   // ---------------------------------------------------------------------
   // Exact dedup
@@ -351,7 +323,7 @@ object LlmQueries {
     // shared pair-graph build stops paying multiplicity² on exact
     // copies (sf1 stress: q111's first-build cost was 15.6 s, mostly
     // this stage) — then member pairs re-expand, output unchanged.
-    expandSymmetric(setFingerprints(s, dir), repDedupPairs(s, dir))
+    expandJaccard(s, dir, repDedupPairs(s, dir))
       .orderBy(col("doc_a"), col("doc_b"))
 
   /** REP-level verified near-dup pairs (doc_a, doc_b, jaccard ≥ 0.8) —
@@ -380,30 +352,13 @@ object LlmQueries {
       verifyCandidates(repRows, sizes, cand, 0.8)
     }
 
-  /** Re-expand representative-level symmetric pairs (doc_a, doc_b,
-    * `valCol`) to member level: cross-set member pairs inherit the
-    * representatives' exact value (it is a function of the two SETS —
-    * Jaccard for q20/q114, signature Hamming for q22), intra-set pairs
-    * are identical sets and emit `intraVal` (J = sz/(sz+sz−sz) = 1.0;
-    * Hamming = 0). */
-  private def expandSymmetric(fps: DataFrame, repPairs: DataFrame,
-      valCol: String = "jaccard",
-      intraVal: org.apache.spark.sql.Column = lit(1.0)): DataFrame = {
-    val members = fps.select(col("doc_id"), col("fp"))
-    val repFp = fps.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-    val cross = repPairs
-      .join(repFp.select(col("doc_id").as("doc_a"), col("fp").as("fpa")), "doc_a")
-      .join(repFp.select(col("doc_id").as("doc_b"), col("fp").as("fpb")), "doc_b")
-      .join(members.select(col("doc_id").as("xa"), col("fp").as("fpa")), "fpa")
-      .join(members.select(col("doc_id").as("xb"), col("fp").as("fpb")), "fpb")
-      .select(least(col("xa"), col("xb")).as("doc_a"),
-        greatest(col("xa"), col("xb")).as("doc_b"), col(valCol))
-    val intra = members.as("x").join(members.as("y"),
-        col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        intraVal.as(valCol))
-    cross.unionByName(intra)
-  }
+  /** Member-level near-dup pairs from rep-level ones: cross-set member
+    * pairs inherit the reps' value (a function of the two SETS — Jaccard
+    * for q20/q21/q114), intra-set pairs are identical sets, J =
+    * sz/(sz+sz−sz) = 1.0. */
+  private def expandJaccard(s: SparkSession, dir: String, repPairs: DataFrame): DataFrame =
+    ClassCollapse.expandPairs(setFingerprints(s, dir).select(col("doc_id"), col("fp")),
+      repStats(s, dir), repPairs, "doc_a", "doc_b", "jaccard", lit(1.0))
 
   /** Shared exact-verification tail (q20 LSH / q21 inverted-index): the
     * candidate pairs (tiny, broadcast) filter the full inverted index;
@@ -478,7 +433,6 @@ object LlmQueries {
     // the engine silently dropped their pairs). Collapsed, df is
     // per-distinct-set and duplicates re-expand exactly afterwards;
     // the collapse itself rides the shared [[repShingleRows]] memo.
-    val fps = setFingerprints(s, dir)
     val repRows = repShingleRows(s, dir)
     val sizes = repStats(s, dir).select(col("doc_id"), col("sz"))
     val lists = memo(s, dir, "postings_reps", "w3")(
@@ -502,7 +456,7 @@ object LlmQueries {
       .filter(round(col("iub").cast("double")
         / (col("na") + col("nb") - col("iub")), 4) >= 0.8)
       .select(col("a"), col("b"))
-    expandSymmetric(fps, verifyCandidates(repRows, sizes, cand, 0.8))
+    expandJaccard(s, dir, verifyCandidates(repRows, sizes, cand, 0.8))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -536,40 +490,22 @@ object LlmQueries {
        | + (${tokvalSql(t2)})) % ${SimP}L""".stripMargin
   }
 
-  /** Distinct (doc_id, v) portable trigram values (the oracle-able twin
-    * of [[shingleRows]]; memoized for the same recompute reasons). */
-  /** (tfp, v): portable trigram VALUES of each DISTINCT text — the
-    * [[repTextRows]] two-level collapse applied to q22's portable hash
-    * family (tokenize one representative per distinct text, never every
-    * copy). */
-  private def repPortableTriRows(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "reptri_portable", "w3,p31") {
-      val reps = textMembers(s, dir).groupBy(col("tfp"))
-        .agg(min(col("doc_id")).as("doc_id"))
-      val n = size(col("toks"))
-      Tables.documents(s, dir)
-        .join(reps, "doc_id")
-        .select(col("tfp"), tokensOf(col("text")).as("toks"))
-        .filter(n >= 3)
-        .select(col("tfp"), explode(arrays_zip(
-          slice(col("toks"), lit(1), n - 2).as("t0"),
-          slice(col("toks"), lit(2), n - 2).as("t1"),
-          slice(col("toks"), lit(3), n - 2).as("t2"))).as("tg"))
-        .select(col("tfp"),
-          expr(triValSql("tg.t0", "tg.t1", "tg.t2")).as("v"))
-        .distinct()
-    }
+  /** q22's portable trigram value ([[triValSql]]) as a [[Trigrams]]
+    * family: the same two-level collapse as the shingle hash, valued so
+    * that the DuckDB oracle can replay it. */
+  private lazy val PortableTrigrams: Trigrams =
+    Trigrams("_tri", "w3,p31", expr(triValSql("tg.t0", "tg.t1", "tg.t2")))
 
   /** SimHash signatures, relationally (same rationale as minhashSigs):
     * explode shingles, 64 bit-sum aggregates in one groupBy (sum of ±1
     * per bit), then assemble the 64-bit signature in a single
     * projection. The naive nested-lambda version of this measured 583 s
     * at sf0.1; this one is ~1 s. Each bit i is the pairwise-independent
-    * hash ((aᵢ·v + bᵢ) mod p) mod 2 — portable arithmetic instead of an
+    * hash ((aᵢ·hg + bᵢ) mod p) mod 2 — portable arithmetic instead of an
     * engine-internal hash, which is what makes q22 oracle-able. */
   private def simhashSigs(rows: DataFrame): DataFrame = {
     val bitSums = simAB.zipWithIndex.map { case ((a, b), i) =>
-      sum(when(expr(s"((${a}L * v + ${b}L) % ${SimP}L) % 2 = 1"), 1).otherwise(-1))
+      sum(when(expr(s"((${a}L * hg + ${b}L) % ${SimP}L) % 2 = 1"), 1).otherwise(-1))
         .as(s"s$i")
     }
     val sums = rows.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
@@ -590,27 +526,13 @@ object LlmQueries {
     * sign-diff count) from the same portable hash family.
     * Scale: identical LSH shape to q20 — groupBy buckets, no O(n²). */
   def q22DedupSimhash(s: SparkSession, dir: String): DataFrame = {
-    // duplicate collapse over the PORTABLE trigram-value sets (distinct
-    // from the xxhash shingle fingerprint — same stance): the signature
-    // is a pure function of the set, so identical sets band and confirm
-    // once and member pairs re-expand with Hamming 0 intra / inherited
-    // Hamming cross.
-    val repTri = repPortableTriRows(s, dir)
-    val fps = memo(s, dir, "setfp_tri", "w3") {
-      // trigram-set fp per DISTINCT TEXT, expanded over members — same
-      // two-level shape as setFingerprints
-      val repFps = repTri.groupBy(col("tfp"))
-        .agg(xxhash64(sort_array(collect_list(col("v")))).as("fp"))
-      textMembers(s, dir).join(repFps, "tfp")
-        .select(col("doc_id"), col("fp"))
-    }
-    val reps = fps.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-    // set-level reps are text-level reps (repShingleRows' min-of-mins
-    // argument), so their trigram values read off the rep-text stream
-    val repTriRows = textMembers(s, dir)
-      .join(reps.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .join(repTri, "tfp")
-      .select(col("doc_id"), col("v"))
+    // duplicate collapse over the PORTABLE trigram-value sets: the
+    // signature is a pure function of the set, so identical sets band
+    // and confirm once and member pairs re-expand with Hamming 0 intra /
+    // inherited Hamming cross.
+    val members = setFingerprints(s, dir, PortableTrigrams).select(col("doc_id"), col("fp"))
+    val classes = ClassCollapse.classes(members, "doc_id", "fp")
+    val repTriRows = repRows(s, dir, PortableTrigrams, classes)
     val sh = memo(s, dir, "simhash_reps", "w3,b64,p31")(simhashSigs(repTriRows))
     val withPos = sh.select(col("doc_id"), col("sig"),
       posexplode(expr("transform(sequence(0, 7), j -> (shiftright(sig, j * 8) & 255L))"))
@@ -626,7 +548,7 @@ object LlmQueries {
         expr("CAST(bit_count(x.sig ^ y.sig) AS BIGINT)").as("hamming"))
       .filter(col("hamming") <= 6)
       .distinct()
-    expandSymmetric(fps, repPairs, "hamming", lit(0L))
+    ClassCollapse.expandPairs(members, classes, repPairs, "doc_a", "doc_b", "hamming", lit(0L))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -1052,7 +974,6 @@ object LlmQueries {
     // needs one REPRESENTATIVE per set; member pairs are re-expanded
     // afterwards, output bit-identical. Set identity via the shared
     // [[setFingerprints]] memo (also feeds q103).
-    val fps = setFingerprints(s, dir)
     val repRows = repShingleRows(s, dir)
     val repSizes = repStats(s, dir).select(col("doc_id"), col("sz"))
 
@@ -1074,7 +995,7 @@ object LlmQueries {
       .distinct()
     // cross-set member pairs inherit the representatives' exact Jaccard;
     // intra-set pairs are identical sets, J = 1.0 ≥ t by construction
-    expandSymmetric(fps, verifyCandidates(repRows, repSizes, cand, 0.8))
+    expandJaccard(s, dir, verifyCandidates(repRows, repSizes, cand, 0.8))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -1464,8 +1385,7 @@ object LlmQueries {
   def q150Winnowing(s: SparkSession, dir: String): DataFrame = {
     val K = 5; val W = 4
     val members = textMembers(s, dir) // (doc_id, tfp)
-    val classes = members.groupBy(col("tfp"))
-      .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("csz"))
+    val classes = ClassCollapse.classes(members, "doc_id", "tfp")
     val n = size(col("toks"))
     val kg = Tables.documents(s, dir)
       .join(classes.select(col("doc_id"), col("tfp")), "doc_id")
@@ -1486,9 +1406,9 @@ object LlmQueries {
       .withColumn("wmin", min(col("kg")).over(wcls.rowsBetween(0, W - 1)))
       .select(col("tfp"), col("wmin")).distinct()
     // member-level doc frequency from class sizes: a fingerprint kept by
-    // classes {c} is held by Σ csz(c) documents
-    val spread = fps.join(classes.select(col("tfp"), col("csz")), "tfp")
-      .groupBy(col("wmin")).agg(sum(col("csz")).as("ndocs"))
+    // classes {c} is held by Σ mult(c) documents
+    val spread = fps.join(classes.select(col("tfp"), col("mult")), "tfp")
+      .groupBy(col("wmin")).agg(sum(col("mult")).as("ndocs"))
     val stats = kg.groupBy(col("tfp")).agg(count(lit(1)).as("n_kgrams"))
     val perClass = stats.join(
       fps.join(spread, "wmin")

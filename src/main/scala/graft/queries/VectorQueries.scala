@@ -5,7 +5,7 @@ import graft.functions.TextFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Iteration
+import graft.operators.{ClassCollapse, Iteration}
 import org.apache.spark.sql.graft.VectorExpressions.{nearestCentroid, vecDot, vecNorm}
 
 /** Similarity search over the `embeddings` table (`Array[Float]` column).
@@ -153,7 +153,7 @@ object VectorQueries {
       // count. Class-sized and read by each round's assign × 2 rounds ⇒
       // eagerly checkpointed like `e`.
       val dv = Iteration.ckpt(e
-        .groupBy(xxhash64(col("embedding")).as("fp"))
+        .groupBy(ClassCollapse.key(col("embedding")).as("fp"))
         .agg(count(lit(1)).as("mult"), first(col("embedding")).as("embedding")))
       for (_ <- 1 to 2) {
         // Weighted mean, BIT-IDENTICAL to the member-level
@@ -234,43 +234,27 @@ object VectorQueries {
   def q46CosinePairs(s: SparkSession, dir: String): DataFrame =
     cosinePairs(s, dir).orderBy(col("id_a"), col("id_b"))
 
-  /** The exact cosine-pair graph (id_a < id_b, cos ≥ 0.4) behind
-    * q46/q64/q110, memoized per (session, dir) — all three registry
-    * entries pay the blocked all-pairs join ONCE per session.
-    *
-    * Exact-duplicate collapse (same production composition as q114):
-    * byte-identical vectors — at web scale every duplicated document
-    * contributes one — cost multiplicity² in any pairwise stage, so
-    * the blocked join runs over one REPRESENTATIVE per distinct
-    * vector (xxhash64 of the float array; the usual n²/2⁶⁴ collision
-    * stance) and member pairs re-expand afterwards. Identical vectors
-    * have cos = dot/(√dot·√dot) = 1/(1+ε), |ε| ≤ 2⁻⁵², which rounds
-    * to 1.000000 at 6 dp in every IEEE engine — so intra-group pairs
-    * emit the constant the oracle computes. The 10×-replicated sf1
-    * stress corpus drops the q46/q64/q110 family from 28/26/37 s to
-    * output-bound seconds; on duplicate-free corpora the collapse is
-    * one vocabulary-sized groupBy of overhead. */
-  /** Members (vec_id, fp) of the exact-duplicate collapse — fp groups
-    * identical embeddings; the group REP is its min vec_id. */
+  /** Members (vec_id, fp) of the exact-duplicate collapse: fp is the
+    * [[ClassCollapse.key]] of the embedding. */
   private def embMembers(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
-      .select(col("vec_id"), xxhash64(col("embedding")).as("fp"))
+      .select(col("vec_id"), ClassCollapse.key(col("embedding")).as("fp"))
 
-  /** One representative per DISTINCT embedding (fp, vec_id = min member
-    * id, embedding, nrm) — the exact-duplicate collapse spine shared by
-    * the LSH (q28), blocked-pair (q46 family), and IVF-PQ (q139)
-    * candidate stages. Memoized: each consumer would otherwise pay the
-    * same corpus-wide groupBy per query. `first` is deterministic in
-    * VALUE here — every member of an fp group carries a byte-identical
-    * array (the n²/2⁶⁴ collision stance). */
+  /** The embedding classes (fp, vec_id = min member id, mult, embedding,
+    * nrm): one representative per DISTINCT embedding — the
+    * exact-duplicate collapse spine shared by the LSH (q28), blocked-pair
+    * (q46 family), cluster (q110/q228), and IVF-PQ (q139) stages.
+    * Memoized: each consumer would otherwise pay the same corpus-wide
+    * groupBy per query. `first` is deterministic in VALUE here — every
+    * member of a class carries a byte-identical array — so the norm is
+    * taken once per class, after the collapse. */
   private[queries] def embReps(s: SparkSession, dir: String): DataFrame =
     graft.PlanCache.memo(s, dir, "emb_reps", "xxh64") {
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding"), vecNorm(col("embedding")).as("nrm"))
-        .withColumn("fp", xxhash64(col("embedding")))
-        .groupBy(col("fp"))
-        .agg(min(col("vec_id")).as("vec_id"),
-          first(col("embedding")).as("embedding"), first(col("nrm")).as("nrm"))
+      ClassCollapse.classes(
+        Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"),
+          ClassCollapse.key(col("embedding")).as("fp")),
+        "vec_id", "fp", first(col("embedding")).as("embedding"))
+        .withColumn("nrm", vecNorm(col("embedding")))
     }
 
   /** REP-level ε-pairs (id_a < id_b, cos ≥ 0.4, 6dp grid) — the blocked
@@ -306,23 +290,25 @@ object VectorQueries {
         .filter(col("cos_sim") >= 0.4)
     }
 
+  /** The exact cosine-pair graph (id_a < id_b, cos ≥ 0.4) behind
+    * q46/q64/q110, memoized per (session, dir) — all three registry
+    * entries pay the blocked all-pairs join ONCE per session.
+    *
+    * Exact-duplicate collapse (same production composition as q114):
+    * byte-identical vectors — at web scale every duplicated document
+    * contributes one — cost multiplicity² in any pairwise stage, so
+    * the blocked join runs over one REPRESENTATIVE per distinct
+    * vector ([[repCosinePairs]]) and member pairs re-expand afterwards.
+    * Identical vectors have cos = dot/(√dot·√dot) = 1/(1+ε),
+    * |ε| ≤ 2⁻⁵², which rounds to 1.000000 at 6 dp in every IEEE engine
+    * — so intra-class pairs emit the constant the oracle computes. The
+    * 10×-replicated sf1 stress corpus drops the q46/q64/q110 family
+    * from 28/26/37 s to output-bound seconds; on duplicate-free corpora
+    * the collapse is one vocabulary-sized groupBy of overhead. */
   private[queries] def cosinePairs(s: SparkSession, dir: String): DataFrame =
     graft.PlanCache.memo(s, dir, "cosine_pairs", "t0.4,B8") {
-      val members = embMembers(s, dir)
-      val repPairs = repCosinePairs(s, dir)
-      val repFp = members.groupBy(col("fp")).agg(min(col("vec_id")).as("vec_id"))
-      val cross = repPairs
-        .join(repFp.select(col("vec_id").as("id_a"), col("fp").as("fpa")), "id_a")
-        .join(repFp.select(col("vec_id").as("id_b"), col("fp").as("fpb")), "id_b")
-        .join(members.select(col("vec_id").as("xa"), col("fp").as("fpa")), "fpa")
-        .join(members.select(col("vec_id").as("xb"), col("fp").as("fpb")), "fpb")
-        .select(least(col("xa"), col("xb")).as("id_a"),
-          greatest(col("xa"), col("xb")).as("id_b"), col("cos_sim"))
-      val intra = members.as("x").join(members.as("y"),
-          col("x.fp") === col("y.fp") && col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"),
-          lit(1.0).as("cos_sim"))
-      cross.unionByName(intra)
+      ClassCollapse.expandPairs(embMembers(s, dir), embReps(s, dir),
+        repCosinePairs(s, dir), "id_a", "id_b", "cos_sim", lit(1.0))
     }
 
   /** Shared DuckDB collapse fragment for the embedding-pair oracles —
@@ -484,8 +470,7 @@ object VectorQueries {
     val minAdj = rp.select(col("id_a").as("rep"), col("id_b").as("other"))
       .unionByName(rp.select(col("id_b").as("rep"), col("id_a").as("other")))
       .groupBy(col("rep")).agg(min(col("other")).as("min_adj"))
-    val kept = embMembers(s, dir)
-      .groupBy(col("fp")).agg(min(col("vec_id")).as("rep"))
+    val kept = embReps(s, dir).select(col("vec_id").as("rep"))
       .join(minAdj, Seq("rep"), "left")
       .filter(col("min_adj").isNull || col("rep") < col("min_adj"))
       .select(col("rep").as("vec_id"))
@@ -752,10 +737,9 @@ object VectorQueries {
       // sampled member contributes its class's (sub, svec) rows, so the
       // sampled multiset is repSubvecs ⋈ (per-class sampled-member
       // count), re-grouped on the VALUE because distinct classes can
-      // share a sub-vector value in one subspace. Group keys are scalar
-      // fingerprints (xxhash64-of-value, the [[embMembers]] collision
-      // stance) — array group-keys fall back to SortAggregate
-      // (measured: 2× the training cost).
+      // share a sub-vector value in one subspace. Group keys are the
+      // scalar [[ClassCollapse.key]] of the value — array group-keys
+      // fall back to SortAggregate (measured: 2× the training cost).
       val sampledClassCounts = embMembers(s, dir).crossJoin(step)
         .filter(pmod(col("vec_id"), col("step")) === 0)
         .groupBy(col("fp")).agg(count(lit(1)).as("m"))
@@ -765,7 +749,7 @@ object VectorQueries {
       // sized (≤ |distinct| · 8 rows), so the pinned blocks are
       // kilobytes-to-MBs at any corpus scale.
       val dv = Iteration.ckpt(repSubvecs(s, dir).join(sampledClassCounts, "fp")
-        .groupBy(col("sub"), xxhash64(col("svec")).as("sfp"))
+        .groupBy(col("sub"), ClassCollapse.key(col("svec")).as("sfp"))
         .agg(first(col("svec")).as("svec"), sum(col("m")).as("mult"))
         .drop("sfp"))
       for (_ <- 1 to 2) {
@@ -839,7 +823,7 @@ object VectorQueries {
     * Exact-duplicate collapse (q28's idiom, r13): cell residency, PQ
     * codes, and the ADC score are functions of the embedding VALUE
     * alone, so the whole candidate stage runs once per DISTINCT
-    * embedding class (xxhash64 fingerprint; class key = min member id)
+    * embedding class ([[embReps]]; class rep = min member id)
     * and members re-attach only at the final top-k. The previous
     * member-level form sort-merged probes × cell members — ~10⁹
     * candidate rows under 1000× duplicate replication, the registry's
@@ -1203,34 +1187,19 @@ object VectorQueries {
   def q110SemanticClusters(s: SparkSession, dir: String): DataFrame =
     semClusters(s, dir).orderBy(col("vec_id"))
 
-  /** The semantic cluster assignment (vec_id, cluster_id), memoized —
-    * node-count-sized output of the pair join + iterative CC chain,
-    * shared by q110 and the q149 cohesion audit (the q70/q135 memo
-    * stance applied to the embedding-side clusters). */
-  /** (vec_id, cluster_id) of the ε-graph's connected components —
+  /** (vec_id, cluster_id) of the ε-graph's connected components,
+    * memoized — shared by q110 and the q149 cohesion audit (the
+    * q70/q135 memo stance applied to the embedding-side clusters).
     * REP-level contraction + member expansion (r12, after the sf100
-    * sweep OOM'd the member-level form): star-contraction runs on the
-    * rep graph (one node per DISTINCT embedding — under 1000×
-    * replication, ~10⁶× fewer edges than the member graph it replaces),
-    * then members inherit their rep's component through the fp join,
-    * and a duplicate group with NO external edge is a component of its
-    * own (the oracle's `rsolo` leg). cluster_id is unchanged: each
-    * rep IS its group's min member, so the min rep of a component is
-    * the min member — the same id member-level CC emitted. */
+    * sweep OOM'd the member-level form) through
+    * [[ClassCollapse.components]]: star-contraction runs on the rep
+    * graph (one node per DISTINCT embedding — under 1000× replication,
+    * ~10⁶× fewer edges than the member graph it replaces); a duplicate
+    * group with NO external edge is the oracle's `rsolo` leg. */
   private[queries] def semClusters(s: SparkSession, dir: String): DataFrame =
     graft.PlanCache.memo(s, dir, "sem_clusters", "t0.4") {
-      val members = embMembers(s, dir)
-      val groups = members.groupBy(col("fp"))
-        .agg(min(col("vec_id")).as("rep"), count(lit(1)).as("mult"))
-      val repCc = graft.operators.ConnectedComponents
-        .run(repCosinePairs(s, dir).select(col("id_a"), col("id_b")))
-        .select(col("node").as("rep"), col("component"))
-      val solo = groups.filter(col("mult") >= 2)
-        .join(repCc.select(col("rep")), Seq("rep"), "left_anti")
-        .select(col("rep"), col("rep").as("component"))
-      members
-        .join(groups.select(col("fp"), col("rep")), "fp")
-        .join(repCc.unionByName(solo), "rep")
+      ClassCollapse.components(embMembers(s, dir), embReps(s, dir),
+          repCosinePairs(s, dir).select(col("id_a"), col("id_b")))
         .select(col("vec_id"), col("component").as("cluster_id"))
     }
 
@@ -1301,7 +1270,7 @@ object VectorQueries {
         Tables.embeddings(s, dir)
           .select(col("vec_id"), col("embedding"), vecNorm(col("embedding")).as("nrm")),
         "vec_id")
-      .withColumn("fp", xxhash64(col("embedding")))
+      .withColumn("fp", ClassCollapse.key(col("embedding")))
       .groupBy(col("cluster_id"), col("fp"))
       .agg(count(lit(1)).as("cnt"),
         first(col("embedding")).as("embedding"), first(col("nrm")).as("nrm"))
@@ -2121,8 +2090,7 @@ object VectorQueries {
     * the core subgraph. */
   def q228DbscanClusters(s: SparkSession, dir: String): DataFrame = {
     val members = embMembers(s, dir)
-    val groups = members.groupBy(col("fp"))
-      .agg(min(col("vec_id")).as("rep"), count(lit(1)).as("mult"))
+    val groups = embReps(s, dir).select(col("fp"), col("vec_id").as("rep"), col("mult"))
     val rp = repCosinePairs(s, dir).select(col("id_a"), col("id_b"))
     val sym = rp.select(col("id_a").as("rep"), col("id_b").as("nb"))
       .unionByName(rp.select(col("id_b").as("rep"), col("id_a").as("nb")))

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Dev attribution tool (r14 optimization round, NOT part of the driver
@@ -23,14 +22,7 @@ object StreamProf {
       "q99_stream_interval_join", "q141_stream_enrich", "q187_stream_left_join",
       "q205_streaming_topk", "q222_stream_cdc_merge", "q237_stream_domain_rollup")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cpus)
     // collect per-batch durationMs from every stream the query runs
     val phases = mutable.Map.empty[String, Long].withDefaultValue(0L)
     var batches = 0

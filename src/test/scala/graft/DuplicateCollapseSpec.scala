@@ -138,23 +138,35 @@ class DuplicateCollapseSpec extends AnyFunSuite {
     assert(comp.exists { case (n, c) => n == c + OFF && comp.contains(c) })
   }
 
-  test("q64 class-level survivors equal member-level drop on doubled embeddings") {
-    val vecs = spark.read.parquet(s"$dupDir/embeddings.parquet")
+  private lazy val vecs: Map[Long, Array[Float]] =
+    spark.read.parquet(s"$dupDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toMap
+  private lazy val vecIds: Seq[Long] = vecs.keys.toSeq.sorted
+
+  /** Brute-force member-level ε-pairs (a < b, cos rounded to 6 dp,
+    * ≥ 0.4) over the doubled embeddings — the q46 contract, and the
+    * graph q64/q110/q228 derive from. */
+  private lazy val cosPairs: Set[(Long, Long, Double)] = {
     def dot(x: Array[Float], y: Array[Float]): Double = {
       var s = 0.0; var i = 0
       while (i < x.length) { s += x(i).toDouble * y(i).toDouble; i += 1 }
       s
     }
-    val ids = vecs.keys.toSeq.sorted
-    val dropped = (for {
+    val ids = vecIds
+    (for {
       i <- ids.indices.iterator; j <- (i + 1 until ids.length).iterator
       a = ids(i); b = ids(j)
       c = dot(vecs(a), vecs(b)) /
         (math.sqrt(dot(vecs(a), vecs(a))) * math.sqrt(dot(vecs(b), vecs(b))))
-      if BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble >= 0.4
-    } yield b).toSet
+      r = BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      if r >= 0.4
+    } yield (a, b, r)).toSet
+  }
+
+  test("q64 class-level survivors equal member-level drop on doubled embeddings") {
+    val ids = vecIds
+    val dropped = cosPairs.map(_._2)
     val kept = ids.filterNot(dropped)
     val want = kept.groupBy(_ % 10).map { case (bkt, xs) =>
       (bkt, xs.size.toLong, xs.min, xs.max)
@@ -166,22 +178,8 @@ class DuplicateCollapseSpec extends AnyFunSuite {
   }
 
   test("q228 class-level DBSCAN equals member-level DBSCAN on doubled embeddings") {
-    val vecs = spark.read.parquet(s"$dupDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toMap
-    def dot(x: Array[Float], y: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < x.length) { s += x(i).toDouble * y(i).toDouble; i += 1 }
-      s
-    }
-    val ids = vecs.keys.toSeq.sorted
-    val pairs = (for {
-      i <- ids.indices.iterator; j <- (i + 1 until ids.length).iterator
-      a = ids(i); b = ids(j)
-      c = dot(vecs(a), vecs(b)) /
-        (math.sqrt(dot(vecs(a), vecs(a))) * math.sqrt(dot(vecs(b), vecs(b))))
-      if BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble >= 0.4
-    } yield (a, b)).toSet
+    val ids = vecIds
+    val pairs = cosPairs.map { case (a, b, _) => (a, b) }
     val nbrs = (pairs.toSeq ++ pairs.toSeq.map(p => (p._2, p._1)))
       .groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2).toSet }
     val core = ids.filter(v => nbrs.getOrElse(v, Set.empty).size >= 3).toSet
@@ -258,26 +256,37 @@ class DuplicateCollapseSpec extends AnyFunSuite {
   }
 
   test("q46 on doubled embeddings equals brute-force cosine >= 0.4") {
-    val vecs = spark.read.parquet(s"$dupDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toMap
     val got = graft.queries.VectorQueries.q46CosinePairs(spark, dupDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val ids = vecs.keys.toSeq.sorted
-    def dot(x: Array[Float], y: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < x.length) { s += x(i).toDouble * y(i).toDouble; i += 1 }
-      s
+    assert(got == cosPairs)
+    assert(cosPairs.exists { case (a, b, _) => b == a + OFF }) // intra pairs present
+  }
+
+  test("q110 rep-contracted CC equals member-level closure on doubled embeddings") {
+    val got = graft.queries.VectorQueries.q110SemanticClusters(spark, dupDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = bruteComponents(cosPairs.map { case (a, b, _) => (a, b) })
+    assert(got == want.toSet)
+    // the solo-class leg must occur: a duplicate class with no edge out
+    // of it is a component of exactly its own two members
+    val comps = want.groupBy(_._2).map { case (c, ms) => c -> ms.keySet }
+    assert(comps.exists { case (c, ms) => ms == Set(c, c + OFF) })
+  }
+
+  test("q22 on the doubled corpus equals pristine q22 lifted through the doubling") {
+    def pairs(dir: String): Set[(Long, Long, Long)] =
+      LlmQueries.q22DedupSimhash(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val pristine = pairs(TestSpark.sfDir)
+    // a pristine pair (a, b) appears as all four member combinations
+    // with its Hamming distance; every doc with a signature (>= 3
+    // tokens) pairs with its own copy at distance 0 — the intra leg
+    val lifted = pristine.flatMap { case (a, b, h) =>
+      Seq((a, b, h), (a, b + OFF, h), (b, a + OFF, h), (a + OFF, b + OFF, h))
     }
-    val want = (for {
-      i <- ids.indices.iterator; j <- (i + 1 until ids.length).iterator
-      a = ids(i); b = ids(j)
-      c = dot(vecs(a), vecs(b)) / (math.sqrt(dot(vecs(a), vecs(a))) * math.sqrt(dot(vecs(b), vecs(b))))
-      r = BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      if r >= 0.4
-    } yield (a, b, r)).toSet
-    assert(got == want)
-    assert(want.exists { case (a, b, _) => b == a + OFF }) // intra pairs present
+    val intra = shingleSets.collect { case (d, sh) if d < OFF && sh.nonEmpty => (d, d + OFF, 0L) }
+    assert(pristine.nonEmpty && intra.nonEmpty)
+    assert(pairs(dupDir) == lifted ++ intra)
   }
 
   /** The r14 ivfCentroids collapse (distinct sampled classes ×

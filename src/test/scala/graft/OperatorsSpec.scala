@@ -259,4 +259,31 @@ class OperatorsSpec extends AnyFunSuite {
     // nested blocks (tx arrays included) survive byte-identically
     assert(back.toJSON.collect().sorted.sameElements(blocks.toJSON.collect().sorted))
   }
+
+  // ---- exact-duplicate collapse ---------------------------------------
+
+  test("ClassCollapse: classes, pair expansion and rep-graph components on a hand-built frame") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    // classes by value: x = {1, 4, 7} (mult 3), y = {2} (singleton),
+    // z = {3, 5} (duplicate class, no edge), w = {6} (edgeless singleton)
+    val members = Seq(1L -> "x", 4L -> "x", 7L -> "x", 2L -> "y", 3L -> "z", 5L -> "z", 6L -> "w")
+      .toDF("id", "v").select(col("id"), ClassCollapse.key(col("v")).as("k"))
+    val classes = ClassCollapse.classes(members, "id", "k")
+    assert(classes.select("id", "mult").as[(Long, Long)].collect().toSet ===
+      Set((1L, 3L), (2L, 1L), (3L, 2L), (6L, 1L)))
+
+    // one rep edge x–y: cross pairs inherit its value, intra pairs get 1.0
+    val repPairs = Seq((1L, 2L, 0.5)).toDF("a", "b", "v")
+    val pairs = ClassCollapse.expandPairs(members, classes, repPairs, "a", "b", "v", lit(1.0))
+    assert(pairs.select("a", "b", "v").as[(Long, Long, Double)].collect().toSet === Set(
+      (1L, 2L, 0.5), (2L, 4L, 0.5), (2L, 7L, 0.5),
+      (1L, 4L, 1.0), (1L, 7L, 1.0), (4L, 7L, 1.0), (3L, 5L, 1.0)))
+
+    // x ∪ y is one component; z is its own (mult 2, no edge); w is absent
+    val comps = ClassCollapse.components(members, classes, repPairs.select("a", "b"))
+    assert(comps.as[(Long, Long)].collect().toSet ===
+      Set(1L -> 1L, 4L -> 1L, 7L -> 1L, 2L -> 1L, 3L -> 3L, 5L -> 3L))
+  }
 }
