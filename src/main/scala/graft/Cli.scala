@@ -5,7 +5,7 @@ import graft.sinks.FanOutWriter
 import graft.sources.BlockSources
 import graft.streaming.StreamPipeline
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.Paths
 
@@ -21,7 +21,9 @@ import java.nio.file.Paths
   *
   * EP2 (`index-subscription`, src/main.rs:356-389): consume a work
   * directory forever (S3 stand-in for the Pub/Sub subscription), same
-  * fan-out, exactly-once bookkeeping from the streaming checkpoint.
+  * fan-out, each micro-batch published under its checkpointed batch id
+  * so that a replayed batch replaces its own files
+  * (StreamPipeline.runFanOut).
   */
 object GraftCli {
   private[graft] def session(app: String): SparkSession =
@@ -47,17 +49,28 @@ object IndexRange {
     val metricsSrv = sys.env.get("GRAFT_METRICS_PORT").map(p => metrics.serve(p.toInt))
     metricsSrv.foreach(srv => println(
       s"[graft] /metrics on 127.0.0.1:${srv.getAddress.getPort}"))
-    val wmDir = Paths.get(outDir, "indexed_blocks") // main.rs:31 marker dir
-    val (s2, e2opt) = HighWatermark.resume(wmDir, start, end, reverse)
-    val e2 = e2opt.getOrElse(end)
-    println(s"[graft] extracting [$s2, $e2) (requested [$start, $end), reverse=$reverse)")
-    val blocks = BlockSources.blockRange(spark, s2, e2, reverse)
-    FanOutWriter.jsonl(outDir, GraftCli.tables).publishBlocks(blocks)
-    HighWatermark.markDone(wmDir, s2, e2) // AFTER the sink commit (at-least-once)
+    val (s2, e2) = index(outDir, start, end, reverse)(BlockSources.blockRange(spark, _, _, reverse))
     metrics.recordsPublished.add(e2 - s2)
     println(s"[graft] done; metrics=${metrics.snapshot()}")
     metricsSrv.foreach(_.stop(0))
     spark.stop()
+  }
+
+  /** Resume past completed work, extract the remaining range [s2, e2),
+    * publish it under the range key `<s2>_<e2>`, then record it done.
+    * A run that fails before `markDone`, rerun with the same arguments,
+    * resumes to the same range, so the rerun's publish replaces whatever
+    * the failed run wrote: each block lands exactly once.
+    * @return the range indexed */
+  def index(outDir: String, start: Long, end: Long, reverse: Boolean)(
+      extract: (Long, Long) => DataFrame): (Long, Long) = {
+    val wmDir = Paths.get(outDir, "indexed_blocks") // main.rs:31 marker dir
+    val (s2, e2opt) = HighWatermark.resume(wmDir, start, end, reverse)
+    val e2 = e2opt.getOrElse(end)
+    println(s"[graft] extracting [$s2, $e2) (requested [$start, $end), reverse=$reverse)")
+    FanOutWriter.jsonl(outDir, GraftCli.tables).publishBlocks(extract(s2, e2), s"${s2}_$e2")
+    HighWatermark.markDone(wmDir, s2, e2) // AFTER the sink commit
+    (s2, e2)
   }
 }
 

@@ -1,7 +1,8 @@
 package graft.sinks
 
 import graft.operators.FanOut
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** K8 — per-table fan-out publisher (etl-rust `src/output/publish.rs:9-11`,
@@ -9,37 +10,79 @@ import org.apache.spark.storage.StorageLevel
   * connected up front, every table of a batch published through its own
   * sink.
   *
-  * The Spark shape: a `Map[table, DataFrame => Unit]` applied to the
-  * fan-out's table set, with the nested upstream persisted first so the
-  * expensive extract/fetch stage runs once, not once per table — the
-  * moral equivalent of the reference cloning one connected publisher into
-  * every worker rather than reconnecting per record.
+  * The Spark shape: the fan-out's table set, derived from the nested
+  * upstream persisted first so the expensive extract/fetch stage runs
+  * once, not once per table — the moral equivalent of the reference
+  * cloning one connected publisher into every worker rather than
+  * reconnecting per record. Two ways to publish it:
+  *
+  *   - [[FanOutWriter.jsonl]] / [[FanOutWriter.jsonlSingle]] publish a
+  *     batch in ONE Spark job: every table becomes `(tag, JSON line)`
+  *     rows, the tables are unioned (each branch reads the persisted
+  *     batch), and [[FileSinks.writeTaggedLines]] writes each line to its
+  *     tag's directory. Publishes under a key are replay-safe: a second
+  *     publish with the same key replaces the first one's files.
+  *   - a writer built from arbitrary sinks (`Map[table, DataFrame => Unit]`)
+  *     calls each table's sink in turn: one or more jobs per table, and a
+  *     replay appends again (at-least-once).
   */
-final class FanOutWriter(sinks: Map[String, DataFrame => Unit]) {
+final class FanOutWriter private (tableNames: Set[String],
+    publish: (Map[String, DataFrame], String) => Unit) {
 
-  /** Write every table through its sink; unknown tables fail fast
-    * (features.rs-style config error, not silent drop). */
-  def publishAll(tables: Map[String, DataFrame]): Unit = {
-    val missing = tables.keySet -- sinks.keySet
+  def this(sinks: Map[String, DataFrame => Unit]) =
+    this(sinks.keySet, (tables, _) => tables.foreach { case (name, df) => sinks(name)(df) })
+
+  /** Write every table under a fresh publish key; unknown tables fail
+    * fast (features.rs-style config error, not silent drop). */
+  def publishAll(tables: Map[String, DataFrame]): Unit = publishAll(tables, FanOutWriter.freshKey)
+
+  private def publishAll(tables: Map[String, DataFrame], key: String): Unit = {
+    val missing = tables.keySet -- tableNames
     require(missing.isEmpty, s"no sink configured for tables: $missing")
-    tables.foreach { case (name, df) => sinks(name)(df) }
+    publish(tables, key)
   }
 
-  /** End-to-end batch publish of a nested blocks DF: persist upstream →
-    * fan out → publish each child table → unpersist. */
-  def publishBlocks(nestedBlocks: DataFrame): Unit = {
+  /** End-to-end batch publish of a nested blocks DF under a fresh key
+    * (at-least-once: a retry of the call publishes the batch again). */
+  def publishBlocks(nestedBlocks: DataFrame): Unit =
+    publishBlocks(nestedBlocks, FanOutWriter.freshKey)
+
+  /** Batch publish under `key`: persist upstream → fan out → publish
+    * every child table → unpersist. On the `jsonl` writers a publish
+    * under a key already used replaces that key's files, so a caller
+    * that names a batch stably (a micro-batch id, a block range) gets
+    * exactly one copy of it however often it is replayed. */
+  def publishBlocks(nestedBlocks: DataFrame, key: String): Unit = {
     val cached = nestedBlocks.persist(StorageLevel.MEMORY_AND_DISK)
-    try publishAll(FanOut.tables(cached).asMap)
+    try publishAll(FanOut.tables(cached).asMap, key)
     finally { cached.unpersist(); () }
   }
 }
 
 object FanOutWriter {
+  private def freshKey: String = java.util.UUID.randomUUID().toString
+
+  private def record(df: DataFrame): Column = to_json(struct(df.columns.map(col).toSeq: _*))
+
+  /** A one-job writer: table `t`'s rows become `line(t, df)` strings in
+    * directory `dirOf(t)`; publish markers live under `root/_publish`. */
+  private def lines(root: String, dirOf: Map[String, String],
+      line: (String, DataFrame) => Column): FanOutWriter = {
+    val dirs = dirOf.values.toIndexedSeq.distinct
+    new FanOutWriter(dirOf.keySet, (tables, key) => {
+      val tagged = tables.toSeq.map { case (t, df) =>
+        df.select(lit(dirs.indexOf(dirOf(t))).as("tag"), line(t, df).as("line"))
+      }
+      tagged.reduceOption(_ union _).foreach(
+        FileSinks.writeTaggedLines(_, dirs, s"$root/_publish", key))
+    })
+  }
+
   /** All tables to JSONL under one root (the SEPARATE_PUBLISHERS layout:
-    * one queue/dir per table, docs/environment-variables.md:50-69). */
+    * one queue/dir per table, docs/environment-variables.md:50-69). The
+    * lines equal [[FileSinks.writeJsonl]]'s for the same table. */
   def jsonl(outDir: String, tableNames: Seq[String]): FanOutWriter =
-    new FanOutWriter(tableNames.map(t =>
-      t -> ((df: DataFrame) => FileSinks.writeJsonl(df, outDir, t))).toMap)
+    lines(outDir, tableNames.map(t => t -> s"$outDir/$t").toMap, (_, df) => record(df))
 
   /** SINGLE_PUBLISHER mode (etl-rust
     * `src/output/single_stream_publisher.rs:12-31`, env `QUEUE_NAME`):
@@ -50,9 +93,8 @@ object FanOutWriter {
     * Deprecated in the reference but kept for parity; the per-table
     * [[jsonl]] layout is the production path. */
   def jsonlSingle(outDir: String, queueName: String, tableNames: Seq[String]): FanOutWriter =
-    new FanOutWriter(tableNames.map(t =>
-      t -> ((df: DataFrame) =>
-        FileSinks.writeJsonlMerged(df, outDir, queueName, t))).toMap)
+    lines(outDir, tableNames.map(t => t -> s"$outDir/$queueName").toMap, (t, df) =>
+      to_json(struct(lit(t).as("table"), record(df).as("payload"))))
 
   /** Read one table back out of a merged stream: filter the envelope by
     * tag, then parse the payloads with their own (inferred) schema — the

@@ -35,8 +35,15 @@ object StreamPipeline {
       .json(dir)
 
   /** Continuous fan-out: nested block stream → per-table sinks via
-    * foreachBatch, exactly-once bookkeeping from the checkpoint. Batch
-    * and streaming share FanOut/FanOutWriter code verbatim. */
+    * foreachBatch. Batch and streaming share FanOut/FanOutWriter code
+    * verbatim. Each micro-batch is published under the key
+    * `<query id>-<batch id>`; both survive a restart from the same
+    * checkpoint, so a batch that failed mid-publish (or published but
+    * never committed its offsets) is replayed under the same key. With
+    * the `FanOutWriter.jsonl` writers that replay replaces the batch's
+    * files: after a failure and a restart every table holds each input
+    * row exactly once (StreamingSpec's fault-injection case). Writers
+    * built from arbitrary sinks ignore the key and are at-least-once. */
   def runFanOut(nestedBlocks: DataFrame, writer: FanOutWriter,
       checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
     val trigger = if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
@@ -44,8 +51,12 @@ object StreamPipeline {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        writer.publishBlocks(batch)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // the stream's id, restored from the checkpoint, set on the thread
+        // that runs every batch of the query
+        val queryId = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+        require(queryId != null, "foreachBatch ran outside its streaming query")
+        writer.publishBlocks(batch, s"$queryId-$batchId")
       }
       .start()
   }

@@ -147,6 +147,75 @@ class SinksSpec extends AnyFunSuite {
     assert(partFiles(s"$out/account_refs").isEmpty)
   }
 
+  private val fanOutTables = Seq("blocks", "transactions", "account_refs")
+
+  /** Lines of the part files under `dir`, sorted (none when it is absent). */
+  private def partLines(dir: String): Seq[String] =
+    partFiles(dir).flatMap(f => Files.readAllLines(Paths.get(dir, f)).asScala).sorted
+
+  test("K8 jsonl publishes a non-empty batch in one Spark job") {
+    val out = Files.createTempDirectory("onejob").toString
+    val writer = FanOutWriter.jsonl(out, fanOutTables)
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("publish", "publish")
+      writer.publishBlocks(BlockSources.blockRange(spark, 0, 300))
+      // listener events arrive in order: once the sentinel job's start is
+      // seen, every publish job's start has been seen too
+      sc.setJobGroup("sentinel", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!groups.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("sentinel"))
+      assert(groups.asScala.count(_ == "publish") === 1)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(spark.read.json(s"$out/blocks").count() === 300)
+  }
+
+  test("K8 jsonl lines equal FileSinks.writeJsonl's per table, empty child tables included") {
+    import spark.implicits._
+    val noTx = (0L until 300L).filter(b => (b * 2654435761L) % 97 % 7 == 0)
+    val batches = Seq(BlockSources.blockRange(spark, 1000, 1200),
+      BlockSources.blocksFromIds(noTx.toDF("block_number")))
+    batches.foreach { nested =>
+      val one = Files.createTempDirectory("lines_one").toString
+      val each = Files.createTempDirectory("lines_each").toString
+      FanOutWriter.jsonl(one, fanOutTables).publishBlocks(nested)
+      FanOut.tables(nested).asMap.foreach { case (t, df) => FileSinks.writeJsonl(df, each, t) }
+      fanOutTables.foreach { t =>
+        val want = partLines(s"$each/$t")
+        assert(partLines(s"$one/$t") == want, s"$t: lines differ from writeJsonl's")
+        if (want.nonEmpty)
+          assert(spark.read.json(s"$one/$t").schema == spark.read.json(s"$each/$t").schema, t)
+      }
+    }
+  }
+
+  test("K8 a publish replayed under its key leaves one copy, however it is partitioned") {
+    val out = Files.createTempDirectory("replay").toString
+    val writer = FanOutWriter.jsonl(out, fanOutTables)
+    val nested = BlockSources.blockRange(spark, 0, 200)
+    writer.publishBlocks(nested.repartition(5), "k1")
+    writer.publishBlocks(nested.coalesce(1), "k1")
+    writer.publishBlocks(nested.repartition(3), "k1")
+    writer.publishBlocks(BlockSources.blockRange(spark, 200, 240), "k2")
+    val direct = FanOut.tables(BlockSources.blockRange(spark, 0, 240)).asMap
+    fanOutTables.foreach { t =>
+      val got = spark.read.json(s"$out/$t")
+      assert(got.count() === direct(t).count(), s"$t rows")
+      assert(got.distinct().count() === direct(t).count(), s"$t distinct rows")
+    }
+  }
+
   test("K8 SINGLE_PUBLISHER merged stream demuxes back to exact per-table sets") {
     val out = Files.createTempDirectory("single").toString
     val names = Seq("blocks", "transactions", "account_refs")

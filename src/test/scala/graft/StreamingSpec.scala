@@ -4,11 +4,13 @@ import graft.sinks.FanOutWriter
 import graft.sources.BlockSources
 import graft.streaming.StreamPipeline
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -36,6 +38,63 @@ class StreamingSpec extends AnyFunSuite {
     val blocks = spark.read.json(s"$out/blocks")
     assert(blocks.count() === 30) // no reprocessing of batch 1 (C1 resume)
     assert(blocks.select(countDistinct(col("block_number"))).head().getLong(0) === 30)
+  }
+
+  private val fanOutTables = Seq("blocks", "transactions", "account_refs")
+
+  /** Exact row and distinct-key counts of every published table against
+    * the direct fan-out of `nested`. */
+  private def assertExactlyOnce(out: String, nested: org.apache.spark.sql.DataFrame): Unit = {
+    val keys = Map("blocks" -> Seq("block_number"), "transactions" -> Seq("tx_id"),
+      "account_refs" -> Seq("tx_id", "account"))
+    val direct = graft.operators.FanOut.tables(nested).asMap
+    fanOutTables.foreach { t =>
+      val got = spark.read.json(s"$out/$t")
+      val want = direct(t)
+      assert(got.count() === want.count(), s"$t rows")
+      assert(got.select(keys(t).map(col): _*).distinct().count() ===
+        want.select(keys(t).map(col): _*).distinct().count(), s"$t distinct keys")
+    }
+  }
+
+  private def partFileCount(out: String): Int = fanOutTables.map { t =>
+    val d = java.nio.file.Paths.get(out, t)
+    if (!Files.exists(d)) 0
+    else Files.list(d).iterator().asScala.count(_.getFileName.toString.startsWith("part-"))
+  }.sum
+
+  test("S3 a micro-batch that fails mid-publish is replayed to exactly one copy per table") {
+    val in = Files.createTempDirectory("drop_fault").toString
+    val out = Files.createTempDirectory("streamout_fault").toString
+    val ckpt = Files.createTempDirectory("ckpt_fault").toString
+    val flag = Files.createTempDirectory("flag_fault").resolve("failed").toString
+    // four drop files: four input partitions, twelve publish tasks
+    (0 until 4).foreach { k =>
+      BlockSources.blockRange(spark, k * 25, (k + 1) * 25).coalesce(1).write.mode("append").json(in)
+    }
+    val schema = BlockSources.blockRange(spark, 0, 1).schema
+    val writer = FanOutWriter.jsonl(out, fanOutTables)
+    def source = StreamPipeline.fileDropSource(spark, in, schema)
+      .withColumn("block_number", StreamingSpec.failOnce(flag, 99L)(col("block_number")))
+    val q1 = StreamPipeline.runFanOut(source, writer, ckpt)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q1.awaitTermination(60000))
+    // the tasks of the other partitions committed their files first
+    assert(partFileCount(out) > 0)
+    val q2 = StreamPipeline.runFanOut(source, writer, ckpt)
+    q2.awaitTermination(60000)
+    assert(q2.exception.isEmpty)
+    assertExactlyOnce(out, BlockSources.blockRange(spark, 0, 100))
+  }
+
+  test("EP1 an IndexRange run that fails mid-publish reruns to exactly one copy per table") {
+    val out = Files.createTempDirectory("range_fault").toString
+    val flag = Files.createTempDirectory("flag_range").resolve("failed").toString
+    val extract = (s: Long, e: Long) => BlockSources.blocksFromIds(spark.range(s, e, 1, 4)
+      .select(StreamingSpec.failOnce(flag, e - 1)(col("id")).as("block_number")))
+    intercept[Exception](IndexRange.index(out, 0, 100, reverse = false)(extract))
+    assert(partFileCount(out) > 0)
+    assert(IndexRange.index(out, 0, 100, reverse = false)(extract) === ((0L, 100L)))
+    assertExactlyOnce(out, BlockSources.blockRange(spark, 0, 100))
   }
 
   test("EP2 probes answer during an active stream; readiness flips when it stops") {
@@ -333,5 +392,22 @@ class StreamingSpec extends AnyFunSuite {
       val o = out.find(_.user_id == u)
       assert(o.exists(e => e.cnt == 50L && e.err == 0L), s"heavy $u: $o")
     }
+  }
+}
+
+object StreamingSpec {
+  /** Identity on block numbers, except that the first call with `poison`
+    * (first across all tasks and runs: it creates `flag`) waits two
+    * seconds, long enough for the publish tasks of the other partitions
+    * to commit, and then throws. */
+  def failOnce(flag: String, poison: Long): UserDefinedFunction = udf { (bn: Long) =>
+    val first = bn == poison &&
+      (try { Files.createFile(java.nio.file.Paths.get(flag)); true }
+       catch { case _: java.nio.file.FileAlreadyExistsException => false })
+    if (first) {
+      Thread.sleep(2000)
+      throw new IllegalStateException(s"injected publish fault at block $bn")
+    }
+    bn
   }
 }
