@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{EngineMetrics, HighWatermark}
+import graft.operators.{CustomIndexer, EngineMetrics, HighWatermark}
 import graft.sinks.FanOutWriter
 import graft.sources.BlockSources
 import graft.streaming.StreamPipeline
@@ -160,20 +160,26 @@ object CustomIndex {
       sys.env.toMap
         ++ Map("GRAFT_OUTPUT_DIR" -> outDir)
         ++ args.lift(3).map("GRAFT_CUSTOM_INDEXER" -> _))
-    val indexer = cfg.indexer
+    index(outDir, start, end, cfg.indexer)(BlockSources.blockRange(spark, _, _))
+    println(s"[graft] done")
+    if (owned) spark.stop()
+  }
+
+  /** IndexRange's resume → publish → `markDone` with `indexer`'s tables:
+    * every table is published in one job under the range key
+    * `<s2>_<e2>`, so a rerun after a failed run replaces what the failed
+    * run wrote and each row lands exactly once.
+    * @return the range indexed */
+  def index(outDir: String, start: Long, end: Long, indexer: CustomIndexer)(
+      extract: (Long, Long) => DataFrame): (Long, Long) = {
     val wmDir = Paths.get(outDir, "indexed_blocks")
     val (s2, e2opt) = HighWatermark.resume(wmDir, start, end, reverse = false)
     val e2 = e2opt.getOrElse(end)
     println(s"[graft] custom-indexing [$s2, $e2) with ${indexer.getClass.getName}")
-    val blocks = BlockSources.blockRange(spark, s2, e2).persist()
-    try {
-      indexer.index(blocks).foreach { case (table, df) =>
-        df.write.mode("append").json(s"$outDir/$table")
-      }
-      HighWatermark.markDone(wmDir, s2, e2) // AFTER the sink commit
-    } finally blocks.unpersist()
-    println(s"[graft] done")
-    if (owned) spark.stop()
+    val tables = indexer.index(extract(s2, e2))
+    FanOutWriter.jsonl(outDir, tables.keys.toSeq).publishAll(tables, s"${s2}_$e2")
+    HighWatermark.markDone(wmDir, s2, e2) // AFTER the sink commit
+    (s2, e2)
   }
 }
 

@@ -25,8 +25,11 @@ import org.apache.spark.sql.DataFrame
   */
 trait CustomIndexer extends Serializable {
   /** Table name → records to publish, from one nested-blocks input
-    * (schema of `BlockSources.blockRange`). Callers persist the input
-    * before writing all tables (K8 pattern). */
+    * (schema of `BlockSources.blockRange`). `graft.CustomIndex` publishes
+    * every returned table in one job over the un-persisted input, so each
+    * table's plan reads the input on its own: tables must agree on a
+    * re-read (a deterministic extract), and an indexer whose tables share
+    * an expensive stage persists that stage itself. */
   def index(nestedBlocks: DataFrame): Map[String, DataFrame]
 }
 

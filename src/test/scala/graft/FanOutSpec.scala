@@ -49,6 +49,38 @@ class FanOutSpec extends AnyFunSuite {
     assert(bad2.getMessage.contains("not an array"))
   }
 
+  test("one-scan and tables forms share one projection: per-table column names and order") {
+    val nested = BlockSources.blockRange(spark, 0, 50)
+    val ts = FanOut.tables(nested).asMap
+    val scan = FanOut.scan(nested)
+    assert(ts.keySet == FanOut.tableNames.toSet)
+    FanOut.tableNames.foreach { t =>
+      val fields = scan.rows.select(scan.record(t)).schema.head.dataType
+        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq
+      assert(fields == ts(t).columns.toSeq, t)
+    }
+    // and the one scan tags each table's rows as the tables form has them
+    val counts = scan.rows.groupBy(scan.byTable((t, _) => lit(t)).as("t")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counts == ts.map { case (t, df) => t -> df.count() })
+  }
+
+  test("one-scan form rejects a message with two repeated fields at plan time") {
+    import graft.functions.ProtoDescriptor
+    val root = ProtoDescriptor.parse(
+      """syntax = "proto3";
+        |message Block {
+        |  uint64 block_number = 1;
+        |  repeated string tags = 2;
+        |  repeated string notes = 3;
+        |}""".stripMargin)("Block")
+    val nested = spark.range(3).select(col("id").as("block_number"),
+      array(lit("t")).as("tags"), array(lit("n")).as("notes"))
+    assert(FanOut.fromDescriptor(nested, root).keySet == Set("block", "tags", "notes"))
+    val bad = intercept[IllegalArgumentException](FanOut.scan(nested, root))
+    assert(bad.getMessage.contains("2 repeated fields"))
+  }
+
   test("nested descriptor parses messages, enums, and rejects cycles") {
     import graft.functions.ProtoDescriptor
     import org.apache.spark.sql.types._

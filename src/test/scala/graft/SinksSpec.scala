@@ -153,32 +153,57 @@ class SinksSpec extends AnyFunSuite {
   private def partLines(dir: String): Seq[String] =
     partFiles(dir).flatMap(f => Files.readAllLines(Paths.get(dir, f)).asScala).sorted
 
-  test("K8 jsonl publishes a non-empty batch in one Spark job") {
-    val out = Files.createTempDirectory("onejob").toString
-    val writer = FanOutWriter.jsonl(out, fanOutTables)
+  /** Runs `body` in job group "publish" and returns the number of jobs it
+    * started and the number of RDD blocks it stored. */
+  private def publishEvents(body: => Unit): (Int, Int) = {
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stored = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      override def onBlockUpdated(e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit =
+        if (e.blockUpdatedInfo.blockId.isRDD && e.blockUpdatedInfo.storageLevel.isValid)
+          stored.incrementAndGet()
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup("publish", "publish")
-      writer.publishBlocks(BlockSources.blockRange(spark, 0, 300))
+      body
       // listener events arrive in order: once the sentinel job's start is
-      // seen, every publish job's start has been seen too
+      // seen, every publish job's start and stored block has been seen too
       sc.setJobGroup("sentinel", "sentinel")
       sc.parallelize(Seq(1), 1).count()
       val deadline = System.nanoTime() + 30e9.toLong
       while (!groups.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
       assert(groups.contains("sentinel"))
-      assert(groups.asScala.count(_ == "publish") === 1)
+      (groups.asScala.count(_ == "publish"), stored.get())
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("K8 jsonl publishes a non-empty batch in one Spark job") {
+    val out = Files.createTempDirectory("onejob").toString
+    val writer = FanOutWriter.jsonl(out, fanOutTables)
+    val (jobs, _) = publishEvents(writer.publishBlocks(BlockSources.blockRange(spark, 0, 300)))
+    assert(jobs === 1)
     assert(spark.read.json(s"$out/blocks").count() === 300)
+  }
+
+  test("K8 jsonl publish reads its input once: one job, no cached RDD block") {
+    val out = Files.createTempDirectory("noblock").toString
+    val writer = FanOutWriter.jsonlSingle(out, "all", fanOutTables)
+    val (jobs, stored) =
+      publishEvents(writer.publishBlocks(BlockSources.blockRange(spark, 5000, 5300)))
+    assert(jobs === 1)
+    assert(stored === 0, "the publish cached its input")
+    // the per-sink path caches it: the listener sees those blocks
+    val each = Files.createTempDirectory("noblock_each").toString
+    val perSink = new FanOutWriter(fanOutTables.map(t =>
+      t -> ((df: org.apache.spark.sql.DataFrame) => FileSinks.writeJsonl(df, each, t))).toMap)
+    assert(publishEvents(perSink.publishBlocks(BlockSources.blockRange(spark, 5000, 5300)))._2 > 0)
   }
 
   test("K8 jsonl lines equal FileSinks.writeJsonl's per table, empty child tables included") {
@@ -197,6 +222,30 @@ class SinksSpec extends AnyFunSuite {
         if (want.nonEmpty)
           assert(spark.read.json(s"$one/$t").schema == spark.read.json(s"$each/$t").schema, t)
       }
+    }
+  }
+
+  test("K8 jsonl lines equal writeJsonl's for null and empty nestings from a drop file") {
+    val in = Files.createTempDirectory("nulls_drop")
+    val t0 = "\"block_time\":\"2023-11-14T22:13:20.000Z\""
+    Files.write(in.resolve("drop.json"), Seq(
+      s"""{"block_number":1,$t0,"txs":null}""",
+      s"""{"block_number":2,$t0,"txs":[]}""",
+      s"""{"block_number":3,$t0,"txs":[null,{"tx_id":"a","fee":5,"accounts":["x","y"]}]}""",
+      s"""{"block_number":4,$t0,"txs":[{"tx_id":"b","fee":6,"accounts":null},""" +
+        """{"tx_id":"c","fee":7,"accounts":[]},{"tx_id":"d","fee":8,"accounts":["z",null]}]}"""
+    ).asJava)
+    // the file-drop source's reader: the block schema, pinned
+    val nested = spark.read.schema(BlockSources.blockRange(spark, 0, 1).schema).json(in.toString)
+    val one = Files.createTempDirectory("nulls_one").toString
+    val each = Files.createTempDirectory("nulls_each").toString
+    FanOutWriter.jsonl(one, fanOutTables).publishBlocks(nested)
+    FanOut.tables(nested).asMap.foreach { case (t, df) => FileSinks.writeJsonl(df, each, t) }
+    val rows = Map("blocks" -> 4, "transactions" -> 5, "account_refs" -> 4)
+    fanOutTables.foreach { t =>
+      val want = partLines(s"$each/$t")
+      assert(want.size === rows(t), s"$t: writeJsonl rows")
+      assert(partLines(s"$one/$t") == want, s"$t: lines differ from writeJsonl's")
     }
   }
 

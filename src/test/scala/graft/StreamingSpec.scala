@@ -68,7 +68,7 @@ class StreamingSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("streamout_fault").toString
     val ckpt = Files.createTempDirectory("ckpt_fault").toString
     val flag = Files.createTempDirectory("flag_fault").resolve("failed").toString
-    // four drop files: four input partitions, twelve publish tasks
+    // four drop files: four input partitions, four publish tasks
     (0 until 4).foreach { k =>
       BlockSources.blockRange(spark, k * 25, (k + 1) * 25).coalesce(1).write.mode("append").json(in)
     }
@@ -94,6 +94,25 @@ class StreamingSpec extends AnyFunSuite {
     intercept[Exception](IndexRange.index(out, 0, 100, reverse = false)(extract))
     assert(partFileCount(out) > 0)
     assert(IndexRange.index(out, 0, 100, reverse = false)(extract) === ((0L, 100L)))
+    assertExactlyOnce(out, BlockSources.blockRange(spark, 0, 100))
+  }
+
+  test("EP4 a CustomIndex run that fails mid-publish reruns to exactly one copy per table") {
+    val out = Files.createTempDirectory("custom_fault").toString
+    val flag = Files.createTempDirectory("flag_custom").resolve("failed").toString
+    // the standard tables; account_refs fails once on the range's last block, after a
+    // writer that writes table by table would have appended the other two
+    val indexer = new graft.operators.CustomIndexer {
+      def index(nested: org.apache.spark.sql.DataFrame): Map[String, org.apache.spark.sql.DataFrame] = {
+        val t = graft.operators.FanOut.tables(nested)
+        Map("blocks" -> t.blocks, "transactions" -> t.transactions, "account_refs" -> t.accountRefs
+          .withColumn("block_number", StreamingSpec.failOnce(flag, 99L)(col("block_number"))))
+      }
+    }
+    val extract = (s: Long, e: Long) => BlockSources.blocksFromIds(spark.range(s, e, 1, 4).toDF("block_number"))
+    intercept[Exception](CustomIndex.index(out, 0, 100, indexer)(extract))
+    assert(partFileCount(out) > 0)
+    assert(CustomIndex.index(out, 0, 100, indexer)(extract) === ((0L, 100L)))
     assertExactlyOnce(out, BlockSources.blockRange(spark, 0, 100))
   }
 
