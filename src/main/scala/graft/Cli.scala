@@ -80,7 +80,7 @@ object IndexRange {
   * flatten of every CSV cell → dedup → the same synthetic fetch and
   * per-table fan-out as IndexRange. No range watermark applies (a list
   * is not an interval); completed-list bookkeeping is the sink commit
-  * itself. */
+  * itself, under a key that names the list file (see [[index]]). */
 object IndexList {
   def main(args: Array[String]): Unit = {
     if (args.length != 2) {
@@ -91,11 +91,27 @@ object IndexList {
     val owned = !org.apache.spark.sql.SparkSession.getDefaultSession
       .exists(s => !s.sparkContext.isStopped)
     val spark = GraftCli.session("graft-index-list")
-    val ids = BlockSources.blockListCsv(spark, listPath).distinct()
-    val blocks = BlockSources.blocksFromIds(ids)
-    FanOutWriter.jsonl(outDir, GraftCli.tables).publishBlocks(blocks)
+    index(listPath, outDir)(p =>
+      BlockSources.blocksFromIds(BlockSources.blockListCsv(spark, p).distinct()))
     println(s"[graft] indexed list $listPath into $outDir")
     if (owned) spark.stop()
+  }
+
+  /** Publish `extract(listPath)` under the list's key
+    * `list_<path uuid>_<length>_<modification time>`, read from the list
+    * file's status on the driver through the Hadoop `FileSystem` (no
+    * Spark job). A rerun over the same, unchanged file publishes under
+    * the same key, so it replaces whatever a failed run wrote: each row
+    * lands exactly once. A rewritten file is a new list with a new key. */
+  def index(listPath: String, outDir: String)(extract: String => DataFrame): Unit = {
+    val blocks = extract(listPath)
+    val path = new org.apache.hadoop.fs.Path(listPath)
+    val fs = path.getFileSystem(blocks.sparkSession.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(path)
+    val id = java.util.UUID.nameUUIDFromBytes(
+      fs.makeQualified(path).toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    FanOutWriter.jsonl(outDir, GraftCli.tables)
+      .publishBlocks(blocks, s"list_${id}_${st.getLen}_${st.getModificationTime}")
   }
 }
 

@@ -6,11 +6,13 @@ import org.apache.spark.sql.functions._
 /** Column-level text/vector primitives for the LLM-data-pipeline operators.
   *
   * All of these are pure `org.apache.spark.sql.functions` / SQL-lambda
-  * compositions — no UDFs — so every one stays inside whole-stage codegen
-  * and is distributable as-is. Where an oracle exists, the math is written
-  * as an explicit sequential fold so DuckDB can reproduce it bit-for-bit
-  * (notably cosine: DuckDB's native `list_cosine_similarity` accumulates in
-  * float32 and does NOT match a double fold).
+  * compositions — no UDFs — so every one is distributable as-is; the
+  * SQL-lambda folds (`fingerprint`, `dotDouble`, `normDouble`) evaluate
+  * interpreted, outside whole-stage codegen. Where an oracle exists, the
+  * math is written as an explicit sequential fold so DuckDB can reproduce
+  * it bit-for-bit (notably cosine: DuckDB's native
+  * `list_cosine_similarity` accumulates in float32 and does NOT match a
+  * double fold).
   *
   * Reference context: etl-rust has no text/vector ops (it delegates all
   * analytics to BigQuery, README.md:3); these are the north-star additions
@@ -39,11 +41,13 @@ object TextFunctions {
   // Columns: nested `aggregate(transform(...))` lambdas evaluate
   // interpreted (outside whole-stage codegen) and re-walk the shingle
   // array once per hash function / per bit — measured 583 s for SimHash
-  // alone at sf0.1. The fast shape is relational: explode shingles once,
-  // hash each once, and compute all k mins / 64 bit-sums as codegen'd
-  // aggregates in a single groupBy — see LlmQueries.minhashSigs /
-  // simhashSigs. Keep signature construction in the plan, not in a
-  // per-row lambda interpreter.
+  // alone at sf0.1. SimHash is a native codegen'd kernel over each
+  // distinct text's trigram set (SignatureExpressions.simhash, used by
+  // LlmQueries.q22DedupSimhash); the relational form it replaced — a
+  // re-join to the trigram rows and 64 bit-sum aggregates in one groupBy
+  // — measured 1.9-2.3 s per q22 at sf0.1. MinHash is still relational:
+  // explode shingles once, hash each once, and compute all k mins as
+  // codegen'd aggregates in a single groupBy (LlmQueries.minhashSigs).
 
   /** Cross-engine token value for the rolling-hash fingerprint. Built only
     * from length/ascii/substring so DuckDB computes the identical number.
@@ -63,13 +67,15 @@ object TextFunctions {
   /** Sequential-fold dot product of two float-array columns in DOUBLE.
     * This exact formulation (cast each element, left fold in array order)
     * is what the DuckDB oracle mirrors with list_sum(list_transform(...)).
-    * Scale note: O(d) per pair, stays in codegen; norms should be
-    * precomputed per row BEFORE any join (see VectorQueries). */
+    * It is a higher-order function, evaluated interpreted (outside
+    * whole-stage codegen); queries use the codegen'd `vec_dot`
+    * (VectorExpressions), and this fold serves as its test oracle. */
   def dotDouble(a: String, b: String): Column =
     expr(s"""aggregate(zip_with($a, $b, (x, y) ->
             |  CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)""".stripMargin)
 
-  /** L2 norm of a float-array column, double fold, same mirroring rules. */
+  /** L2 norm of a float-array column, double fold, same mirroring rules;
+    * interpreted as well — the test oracle of `vec_norm`. */
   def normDouble(a: String): Column =
     sqrt(expr(s"""aggregate($a, 0D, (acc, x) ->
                  |  acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))""".stripMargin))

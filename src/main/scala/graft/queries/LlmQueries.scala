@@ -5,6 +5,7 @@ import graft.functions.TextFunctions._
 import graft.operators.ClassCollapse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SignatureExpressions.simhash
 
 /** LLM-training-data pipeline operators over the `documents` table:
   * exact + near-duplicate detection (hash / MinHash-LSH / SimHash /
@@ -125,15 +126,24 @@ object LlmQueries {
       f: Trigrams = Shingles): DataFrame =
     memo(s, dir, s"setfp${f.tag}", f.params) {
       // set fp computed once per DISTINCT TEXT (identical texts have
-      // identical trigram sets), then broadcast back over the members —
-      // the groupBy runs on |distinct texts| rows, not |corpus| rows;
+      // identical trigram sets), then broadcast back over the members;
       // repTextRows is distinct, so the set size is the array's
-      val repFps = repTextRows(s, dir, f).groupBy(col("tfp"))
-        .agg(sort_array(collect_list(col("hg"))).as("set"))
+      val repFps = repSets(s, dir, f)
         .select(col("tfp"), ClassCollapse.key(col("set")).as("fp"),
           size(col("set")).cast("long").as("sz"))
       textMembers(s, dir).join(repFps, "tfp")
         .select(col("doc_id"), col("fp"), col("sz"))
+    }
+
+  /** (tfp, set): each distinct text's sorted, distinct trigram values of
+    * family `f` — the groupBy runs on |distinct texts| rows, not |corpus|
+    * rows. Memoized because the set is both the key of the set class
+    * ([[setFingerprints]]) and the input of row-local signatures (q22),
+    * which then never touch the trigram rows again. */
+  private def repSets(s: SparkSession, dir: String, f: Trigrams): DataFrame =
+    memo(s, dir, s"repsets${f.tag}", f.params) {
+      repTextRows(s, dir, f).groupBy(col("tfp"))
+        .agg(sort_array(collect_list(col("hg"))).as("set"))
     }
 
   /** (fp, doc_id, mult, sz): the shingle-set classes — one
@@ -470,11 +480,11 @@ object LlmQueries {
   /** Modulus for the per-bit universal hashes: 2³¹−1 (prime). Products
     * a·v stay < 2⁶², so both engines evaluate in exact int64 with no
     * ANSI overflow. */
-  private val SimP = 2147483647L
+  private[graft] val SimP = 2147483647L
 
   /** 64 fixed (a, b) pairs for the per-bit family, from a seeded LCG —
     * deterministic constants inlined into BOTH engines' SQL. */
-  private val simAB: IndexedSeq[(Long, Long)] = {
+  private[graft] val simAB: IndexedSeq[(Long, Long)] = {
     var x = 987654321L
     def next(): Long = { x = (x * 1103515245L + 12345L) % SimP; x }
     (0 until 64).map(_ => (math.max(1L, next()), next()))
@@ -496,24 +506,6 @@ object LlmQueries {
   private lazy val PortableTrigrams: Trigrams =
     Trigrams("_tri", "w3,p31", expr(triValSql("tg.t0", "tg.t1", "tg.t2")))
 
-  /** SimHash signatures, relationally (same rationale as minhashSigs):
-    * explode shingles, 64 bit-sum aggregates in one groupBy (sum of ±1
-    * per bit), then assemble the 64-bit signature in a single
-    * projection. The naive nested-lambda version of this measured 583 s
-    * at sf0.1; this one is ~1 s. Each bit i is the pairwise-independent
-    * hash ((aᵢ·hg + bᵢ) mod p) mod 2 — portable arithmetic instead of an
-    * engine-internal hash, which is what makes q22 oracle-able. */
-  private def simhashSigs(rows: DataFrame): DataFrame = {
-    val bitSums = simAB.zipWithIndex.map { case ((a, b), i) =>
-      sum(when(expr(s"((${a}L * hg + ${b}L) % ${SimP}L) % 2 = 1"), 1).otherwise(-1))
-        .as(s"s$i")
-    }
-    val sums = rows.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
-    sums.select(col("doc_id"),
-      expr((0 until 64).map(i => s"IF(s$i >= 0, shiftleft(1L, $i), 0L)")
-        .mkString(" + ")).as("sig"))
-  }
-
   /** SimHash near-dup: 64-bit signature over the shingle set, 8 bands of
     * 8 bits for candidates, Hamming distance ≤ 6 confirms. Band geometry
     * is PIGEONHOLE-COMPLETE for the threshold: ≤ 7 differing bits cannot
@@ -524,7 +516,20 @@ object LlmQueries {
     * EQUALS the brute-force all-pairs Hamming filter, which is exactly
     * what the DuckDB oracle computes (per-bit sign aggregates + pair
     * sign-diff count) from the same portable hash family.
-    * Scale: identical LSH shape to q20 — groupBy buckets, no O(n²). */
+    *
+    * Signatures: each bit i is the pairwise-independent hash
+    * ((aᵢ·v + bᵢ) mod p) mod 2 of a trigram value v — portable
+    * arithmetic instead of an engine-internal hash, which is what makes
+    * q22 oracle-able. They are computed row-locally by the codegen'd
+    * `simhash` kernel from each representative's trigram set (the
+    * [[repSets]] array its set class is keyed on): no re-join to the
+    * trigram rows and no 64-column aggregate, and the integer sign sums
+    * equal the oracle's per-bit aggregates bit for bit.
+    *
+    * Scale: the band self-join is an equi-join, but each 8-bit band
+    * collides on about 1/256 of all pairs, so it emits about n²/64
+    * candidate rows over n set classes before the Hamming filter
+    * (ROADMAP item 4: permuted-block tables cut this). */
   def q22DedupSimhash(s: SparkSession, dir: String): DataFrame = {
     // duplicate collapse over the PORTABLE trigram-value sets: the
     // signature is a pure function of the set, so identical sets band
@@ -532,8 +537,12 @@ object LlmQueries {
     // inherited Hamming cross.
     val members = setFingerprints(s, dir, PortableTrigrams).select(col("doc_id"), col("fp"))
     val classes = ClassCollapse.classes(members, "doc_id", "fp")
-    val repTriRows = repRows(s, dir, PortableTrigrams, classes)
-    val sh = memo(s, dir, "simhash_reps", "w3,b64,p31")(simhashSigs(repTriRows))
+    val sh = memo(s, dir, "simhash_reps", "w3,b64,p31") {
+      textMembers(s, dir).join(classes.select(col("doc_id")), "doc_id")
+        .join(repSets(s, dir, PortableTrigrams), "tfp")
+        .select(col("doc_id"),
+          simhash(col("set"), simAB.map(_._1), simAB.map(_._2), SimP).as("sig"))
+    }
     val withPos = sh.select(col("doc_id"), col("sig"),
       posexplode(expr("transform(sequence(0, 7), j -> (shiftright(sig, j * 8) & 255L))"))
         .as(Seq("band", "key")))

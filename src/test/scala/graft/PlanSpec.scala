@@ -1,6 +1,9 @@
 package graft
 
 import graft.queries._
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape assertions: the scale claims each query's doc
@@ -13,6 +16,17 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Every physical node of `p`, through AQE wrappers and query stages,
+    * and through memo caches unless `memos = false` (then a memo's scan
+    * is a leaf). */
+  private def physicalNodes(p: SparkPlan, memos: Boolean = true): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => physicalNodes(a.executedPlan, memos)
+    case q: QueryStageExec => physicalNodes(q.plan, memos)
+    case m: InMemoryTableScanExec =>
+      m +: (if (memos) physicalNodes(m.relation.cachedPlan, memos) else Nil)
+    case _ => p +: p.children.flatMap(physicalNodes(_, memos))
+  }
 
   test("q02: predicates and column pruning reach the parquet scan") {
     val p = plan(RelationalQueries.q02FilterProject(spark, dir))
@@ -226,23 +240,13 @@ class PlanSpec extends AnyFunSuite {
   test("repCodes/pqCodebooks: PQ assignment is the nearest_centroid kernel — no min_by, no sub-vector fingerprint") {
     import org.apache.spark.sql.catalyst.expressions.XxHash64
     import org.apache.spark.sql.catalyst.expressions.aggregate.MinBy
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.graft.VectorExpressions.NearestCentroid
-    // every physical node, through AQE wrappers, query stages and memo
-    // caches (the memos are materialized first: other specs may have
-    // built them already, so the final AQE plan is the one inspected)
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
-      case _ => p +: p.children.flatMap(nodes)
-    }
+    // the memos are materialized first: other specs may have built them
+    // already, so the final AQE plan is the one inspected
     for ((name, df) <- Seq("repCodes" -> VectorQueries.repCodes(spark, dir),
         "pqCodebooks" -> VectorQueries.pqCodebooks(spark, dir))) {
       df.count()
-      val exprs = nodes(df.queryExecution.executedPlan).flatMap(_.expressions)
+      val exprs = physicalNodes(df.queryExecution.executedPlan).flatMap(_.expressions)
       assert(exprs.exists(_.exists(_.isInstanceOf[NearestCentroid])), s"$name: no kernel")
       assert(!exprs.exists(_.exists(_.isInstanceOf[MinBy])), s"$name: min_by aggregate")
       assert(!exprs.exists(_.exists {
@@ -285,6 +289,28 @@ class PlanSpec extends AnyFunSuite {
       val p = plan(q(spark, dir))
       assert(!p.contains("CartesianProduct"), p.linesIterator.take(5).mkString("\n"))
       assert(!p.contains("BroadcastNestedLoopJoin"), "O(n²) join shape in an LSH plan")
+    }
+  }
+
+  test("q22: signatures are the simhash kernel over the trigram sets — no 64-column aggregate, no trigram rows") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.graft.SignatureExpressions.SimHash
+    LlmQueries.q22DedupSimhash(spark, dir).collect() // materialize the memos
+    val df = LlmQueries.q22DedupSimhash(spark, dir)
+    df.collect()
+    val all = physicalNodes(df.queryExecution.executedPlan)
+    val wide = all.collect { case g: BaseAggregateExec if g.aggregateExpressions.size >= 64 => g }
+    assert(wide.isEmpty, wide.map(_.simpleString(200)).mkString("\n"))
+    // each memo's own nodes, with the memos it reads as leaves
+    val sigMemos = all.collect {
+      case m: InMemoryTableScanExec => physicalNodes(m.relation.cachedPlan, memos = false)
+    }.filter(_.exists(_.expressions.exists(_.exists(_.isInstanceOf[SimHash]))))
+    assert(sigMemos.nonEmpty, "no signature memo built by the simhash kernel")
+    for (own <- sigMemos) {
+      val trigramRows = own.filter(_.output.exists(_.name == "hg"))
+      assert(!trigramRows.exists(_.isInstanceOf[ShuffleExchangeLike]), "trigram-row exchange")
+      assert(trigramRows.isEmpty, trigramRows.map(_.simpleString(200)).mkString("\n"))
     }
   }
 

@@ -116,6 +116,21 @@ class StreamingSpec extends AnyFunSuite {
     assertExactlyOnce(out, BlockSources.blockRange(spark, 0, 100))
   }
 
+  test("EP5 an IndexList run that fails mid-publish reruns to exactly one copy per table") {
+    val out = Files.createTempDirectory("list_fault").toString
+    val flag = Files.createTempDirectory("flag_list").resolve("failed").toString
+    val csv = Files.createTempFile("blocks", ".csv")
+    // a header, blocks 0-99 and one duplicate; four publish partitions
+    Files.writeString(csv, (0 until 100).mkString("ids\n", "\n", "\n42\n"))
+    val extract = (p: String) => BlockSources.blocksFromIds(
+      BlockSources.blockListCsv(spark, p).distinct().repartition(4)
+        .select(StreamingSpec.failOnce(flag, 99L)(col("block_number")).as("block_number")))
+    intercept[Exception](IndexList.index(csv.toString, out)(extract))
+    assert(partFileCount(out) > 0)
+    IndexList.index(csv.toString, out)(extract)
+    assertExactlyOnce(out, BlockSources.blockRange(spark, 0, 100))
+  }
+
   test("EP2 probes answer during an active stream; readiness flips when it stops") {
     val in = Files.createTempDirectory("drop_probe").toString
     val out = Files.createTempDirectory("streamout_probe").toString

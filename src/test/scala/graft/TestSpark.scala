@@ -19,6 +19,22 @@ object TestSpark {
     s
   }
 
+  /** Runs `body` with expressions evaluated interpreted: no whole-stage
+    * codegen and no generated projections, so every expression's
+    * `eval` path runs. */
+  def interpreted[T](body: => T): T = {
+    val conf = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      conf.foreach { case (k, x) => spark.conf.set(k, x) }
+      body
+    } finally prev.foreach {
+      case (k, Some(x)) => spark.conf.set(k, x)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** sf0.001 testdata — smallest scale, for specs. */
   val sfDir = "/root/testdata/sf0.001"
 

@@ -67,16 +67,7 @@ class VectorExprSpec extends AnyFunSuite {
     val want = relational(v, c, cosine)
     assert(want.size === vecs.size)
     assert(kernel(v, c, cosine) === want)
-    val conf = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      conf.foreach { case (k, x) => spark.conf.set(k, x) }
-      assert(kernel(v, c, cosine) === want, "interpreted eval")
-    } finally prev.foreach {
-      case (k, Some(x)) => spark.conf.set(k, x)
-      case (k, None) => spark.conf.unset(k)
-    }
+    assert(TestSpark.interpreted(kernel(v, c, cosine)) === want, "interpreted eval")
     want
   }
 
